@@ -66,7 +66,8 @@ def main() -> None:
         "OUT/snapshot_tiers/* with hidden partitioning — the "
         "manifest-pruned serving store run_query/run_rules read "
         "(files-opened ≈ the queried window); incremental runs publish "
-        "as a dynamic partition overwrite scoped to the batch (O(delta))",
+        "as a dynamic partition overwrite scoped to the batch (O(delta)); "
+        "a --backfill republishes in full",
     )
     ap.add_argument(
         "--tier-partition-spec",
@@ -142,8 +143,11 @@ def main() -> None:
             "source", "event_ts", "v", "doc_id"
         )
         stats = pipe.backfill(ev, start, end, run_fp or "backfill")
-        print(json.dumps({"out": args.out, "backfill": [start, end],
-                          "replaced": stats}))
+        result = {"out": args.out, "backfill": [start, end], "replaced": stats}
+        if args.snapshot_tiers:
+            # a window replace is not a batch of additions: republish fully
+            result["snapshot_tiers"] = _publish(spark, args, changed=None)
+        print(json.dumps(result))
         return
     if args.from_snapshots:
         from workbook_exporter_fe_spark.sources.snapshots import SnapshotTable
@@ -170,21 +174,11 @@ def main() -> None:
         "master": spark.sparkContext.master,
     }
     if args.snapshot_tiers:
-        from workbook_exporter_fe_spark.plans.pipeline import (
-            publish_snapshot_tiers,
-        )
-
         # incremental refresh (--events): dynamic-partition-overwrite
         # publish scoped to the batch's partitions — O(delta), never a
-        # full-tier republish. ';' inside a transform stands for ','
-        # (same convention as run_maintenance --partition-spec).
-        result["snapshot_tiers"] = publish_snapshot_tiers(
-            spark, args.out,
-            changed=batch if args.events else None,
-            spec=tuple(
-                p.replace(";", ",")
-                for p in args.tier_partition_spec.split(",")
-            ),
+        # full-tier republish
+        result["snapshot_tiers"] = _publish(
+            spark, args, changed=batch if args.events else None
         )
     if args.verify:
         result["verify"] = pipe.verify()
@@ -192,6 +186,18 @@ def main() -> None:
     spark.stop()
     if args.verify and not result["verify"]["ok"]:
         sys.exit(1)
+
+
+def _publish(spark, args, changed):
+    """publish_snapshot_tiers at --tier-partition-spec; ';' inside a
+    transform stands for ',' (same convention as run_maintenance
+    --partition-spec)."""
+    from workbook_exporter_fe_spark.plans.pipeline import publish_snapshot_tiers
+
+    return publish_snapshot_tiers(
+        spark, args.out, changed=changed,
+        spec=tuple(p.replace(";", ",") for p in args.tier_partition_spec.split(",")),
+    )
 
 
 if __name__ == "__main__":

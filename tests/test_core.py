@@ -5,12 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from workbook_exporter_fe_spark.operators.eventize import eventize
-from workbook_exporter_fe_spark.operators.tiers import (
-    merge_token_histograms,
-    reaggregate,
-    rollup_tier1,
-    token_histogram,
-)
+from workbook_exporter_fe_spark.operators.tiers import reaggregate, rollup_tier1
 from workbook_exporter_fe_spark.sources.datagen import gen_sequences
 
 
@@ -80,34 +75,3 @@ def test_tier_cascade_decomposable(spark, events):
     assert t2_direct.exceptAll(t2_from_t1).count() == 0
     t3 = reaggregate(t2_from_t1, "1d")
     assert t3.agg(F.sum("cnt")).collect()[0][0] == events.count()
-
-
-def test_token_histogram_counts(events):
-    th = token_histogram(events, "1m")
-    # total histogram mass == total token count
-    mass = th.select(
-        F.explode("tok_hist").alias("t", "n")
-    ).agg(F.sum("n")).collect()[0][0]
-    total_tokens = events.select(F.sum(F.size("tokens"))).collect()[0][0]
-    assert mass == total_tokens
-    # re-aggregated histograms preserve mass
-    th2 = merge_token_histograms(th, "1h")
-    mass2 = th2.select(F.explode("tok_hist").alias("t", "n")).agg(F.sum("n")).collect()[0][0]
-    assert mass2 == total_tokens
-
-
-def test_eventize_dense_is_mapside_and_stable(spark, sequences):
-    from workbook_exporter_fe_spark.operators.eventize import eventize_dense
-
-    ev = eventize_dense(sequences)
-    plan = ev._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # zero shuffles: pure projection
-    assert ev.count() == sequences.count()
-    a = ev.orderBy("doc_id").collect()
-    b = eventize_dense(sequences.repartition(21)).orderBy("doc_id").collect()
-    assert a == b
-    # ts really is epoch0 + doc index seconds
-    import datetime
-
-    r = next(x for x in a if x.doc_id == "doc-000000000007")
-    assert r.event_ts == datetime.datetime(2026, 1, 1, 0, 0, 7)

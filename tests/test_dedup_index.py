@@ -142,32 +142,6 @@ def test_match_is_query_only_and_fuzzy_decontaminate(spark, tmp_path):
     assert {r.doc_id for r in kept.collect()} == {"t3"}
 
 
-def test_exact_hash_index_incremental(spark, tmp_path):
-    from workbook_exporter_fe_spark.operators.dedup import ExactHashIndex
-
-    b1, b2, b3 = _batches(spark)
-    idx = ExactHashIndex(spark, str(tmp_path / "eidx"))
-    k1 = {r.doc_id for r in idx.add_batch(b1).collect()}
-    assert k1 == {"d01", "d03"}          # d02 == d01 within the batch
-    k2 = {r.doc_id for r in idx.add_batch(b2).collect()}
-    assert k2 == {"d12"}                 # d11 == indexed d01
-    k3 = {r.doc_id for r in idx.add_batch(b3).collect()}
-    assert k3 == {"d21"}                 # d22==d21 within; d23==indexed d12
-    # registry holds exactly one row per distinct content
-    hashes = idx.hashes().collect()
-    assert len(hashes) == len({r.content_hash for r in hashes}) == 4
-    # equals the batch-at-once truth
-    idx2 = ExactHashIndex(spark, str(tmp_path / "eidx2"))
-    all_docs = b1.unionByName(b2).unionByName(b3)
-    assert {r.doc_id for r in idx2.add_batch(all_docs).collect()} == (
-        k1 | k2 | k3
-    )
-    import pytest
-
-    with pytest.raises(ValueError, match="hash_fn"):
-        ExactHashIndex(spark, str(tmp_path / "eidx"), hash_fn="md5")
-
-
 def test_numeric_64bit_ids_stay_exact(spark, tmp_path):
     """The index stores ids as STRING; probe-side joins must compare on
     string too. Joining a bigint id column straight against the string
@@ -192,28 +166,6 @@ def test_numeric_64bit_ids_stay_exact(spark, tmp_path):
     )
     kept2 = incremental_keep(b2, idx.add_batch(b2))
     assert kept2.count() == 0
-
-
-def test_exact_index_mixed_id_types(spark, tmp_path):
-    """ExactHashIndex normalizes ids to string like MinHashIndex — a
-    numeric-id batch after a string-id batch must append, not raise a
-    SchemaMismatch."""
-    from workbook_exporter_fe_spark.operators.dedup import ExactHashIndex
-
-    idx = ExactHashIndex(spark, str(tmp_path / "ex"))
-    s1 = spark.createDataFrame(
-        [("a", [1, 2, 3]), ("b", [4, 5, 6])],
-        "doc_id string, tokens array<int>",
-    )
-    assert idx.add_batch(s1).count() == 2
-    n1 = spark.createDataFrame(
-        [(10, [1, 2, 3]), (11, [7, 8, 9])], "doc_id long, tokens array<int>"
-    )
-    kept = idx.add_batch(n1)  # 10 dups "a"'s content → only 11 survives
-    assert [r.doc_id for r in kept.collect()] == [11]
-    stored = idx.hashes()
-    assert stored.schema["doc_id"].dataType.simpleString() == "string"
-    assert stored.count() == 3
 
 
 def test_fuzzy_decontaminate_numeric_ids(spark, tmp_path):

@@ -17,7 +17,6 @@ from workbook_exporter_fe_spark.operators.drift import (
     drift_vs_previous,
     histogram_drift,
 )
-from workbook_exporter_fe_spark.operators.tiers import token_histogram
 
 EPS = 0.5
 
@@ -50,7 +49,21 @@ def _py_metrics(p: dict, q: dict, eps: float = EPS) -> dict:
 
 @pytest.fixture(scope="module")
 def hists(events):
-    return token_histogram(events, tier="1h").cache()
+    """(source, bucket_ts, tok_hist map<token, count>) per hour."""
+    per_token = (
+        events.select(
+            "source",
+            F.date_trunc("hour", "event_ts").alias("bucket_ts"),
+            F.explode("tokens").alias("token"),
+        )
+        .groupBy("source", "bucket_ts", "token")
+        .agg(F.count("*").alias("n"))
+    )
+    return (
+        per_token.groupBy("source", "bucket_ts")
+        .agg(F.map_from_entries(F.sort_array(F.collect_list(F.struct("token", "n")))).alias("tok_hist"))
+        .cache()
+    )
 
 
 def test_histogram_drift_vs_python(spark, hists):

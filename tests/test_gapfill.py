@@ -4,10 +4,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from workbook_exporter_fe_spark.operators.eventize import inject_gaps
 from workbook_exporter_fe_spark.operators.gapfill import (
     bucket_spine,
     densify,
+    fill_segmented,
     interpolate,
     locf,
 )
@@ -48,6 +48,16 @@ def test_interpolate_linear_exact(spark):
     assert [r["avg_v"] for r in out] == [10.0, 20.0, 30.0, 40.0, 50.0, 40.0, 30.0]
 
 
+def inject_gaps(events, seed: int = 42, mod: int = 10):
+    """Drop ~1/mod of events deterministically; returns (gapped, dropped)."""
+    is_gap = F.pmod(F.xxhash64(F.lit(seed), F.col("doc_id")), F.lit(mod)) == 0
+    flagged = events.withColumn("_gap", is_gap)
+    return (
+        flagged.filter(~F.col("_gap")).drop("_gap"),
+        flagged.filter(F.col("_gap")).drop("_gap"),
+    )
+
+
 def test_interpolate_recovers_injected_gaps(spark, events):
     """Drop ~10% of events; interpolation over 1s buckets must recover the
     dropped v exactly when neighbours are linear... here v is arbitrary, so
@@ -77,7 +87,7 @@ def test_interpolate_recovers_injected_gaps(spark, events):
     assert unchanged.exceptAll(orig).count() == 0
 
 
-# -- segmented (scale-path) variants: bit-equal to the plain operators ----
+# -- segmented (scale-path) fills: bit-equal to the plain operators -------
 
 
 def _multi_day_gaps(spark):
@@ -91,67 +101,46 @@ def _multi_day_gaps(spark):
         for day, hour, val in [(0, 1, 10.0), (0, 5, 20.0), (4, 3, 50.0), (4, 9, 30.0)]:
             rows.append((src, base + dt.timedelta(days=day, hours=hour, minutes=off), val))
     df = spark.createDataFrame(rows, "source string, bucket_ts timestamp, avg_v double")
-    from workbook_exporter_fe_spark.operators.gapfill import densify
-
     return densify(df, "1h", value_cols=["avg_v"])
 
 
-def test_locf_segmented_equals_plain(spark):
-    from workbook_exporter_fe_spark.operators.gapfill import locf, locf_segmented
+def _segmented(dense, how, segment):
+    """One segmented fill, shaped like the plain operator's output."""
+    return (
+        fill_segmented(dense, {"_fill": how}, value_col="avg_v", segment=segment)
+        .drop("avg_v")
+        .withColumnRenamed("_fill", "avg_v")
+        .select(*dense.columns)
+    )
 
+
+def test_locf_segmented_equals_plain(spark):
     dense = _multi_day_gaps(spark)
     a = locf(dense, "avg_v").orderBy("source", "bucket_ts").collect()
-    b = locf_segmented(dense, "avg_v", segment="1d").orderBy("source", "bucket_ts").collect()
+    b = _segmented(dense, "locf", "1d").orderBy("source", "bucket_ts").collect()
     assert a == b
 
 
 def test_interpolate_segmented_equals_plain(spark):
-    from workbook_exporter_fe_spark.operators.gapfill import (
-        interpolate,
-        interpolate_segmented,
-    )
-
     dense = _multi_day_gaps(spark)
     a = interpolate(dense, "avg_v").orderBy("source", "bucket_ts").collect()
-    b = (
-        interpolate_segmented(dense, "avg_v", segment="1d")
-        .orderBy("source", "bucket_ts")
-        .collect()
-    )
+    b = _segmented(dense, "interp", "1d").orderBy("source", "bucket_ts").collect()
     assert a == b
 
 
 def test_segmented_equals_plain_on_tier_data(spark, events):
     """Same equality over the real tier-1 shape (dense minute spine)."""
-    from workbook_exporter_fe_spark.operators.gapfill import (
-        densify,
-        interpolate,
-        interpolate_segmented,
-        locf,
-        locf_segmented,
-    )
-    from workbook_exporter_fe_spark.operators.tiers import rollup_tier1
-
     t1 = rollup_tier1(events).select("source", "bucket_ts", "avg_v")
     dense = densify(t1, "1m", value_cols=["avg_v"])
-    for plain, seg in (
-        (locf, locf_segmented),
-        (interpolate, interpolate_segmented),
-    ):
+    for plain, how in ((locf, "locf"), (interpolate, "interp")):
         a = plain(dense, "avg_v").orderBy("source", "bucket_ts").collect()
-        b = seg(dense, "avg_v", segment="1h").orderBy("source", "bucket_ts").collect()
-        assert a == b, plain.__name__
+        b = _segmented(dense, how, "1h").orderBy("source", "bucket_ts").collect()
+        assert a == b, how
 
 
 def test_fill_segmented_shared_pass_equals_separate(spark):
-    """One shared carry pass must be bit-identical to running the two
-    segmented fills independently (the q64 single-pass restructure)."""
-    from workbook_exporter_fe_spark.operators.gapfill import (
-        fill_segmented,
-        interpolate_segmented,
-        locf_segmented,
-    )
-
+    """One shared carry pass must be bit-identical to running each fill
+    in its own pass (the q64 single-pass restructure)."""
     dense = _multi_day_gaps(spark)
     both = (
         fill_segmented(
@@ -161,16 +150,8 @@ def test_fill_segmented_shared_pass_equals_separate(spark):
         .orderBy("source", "bucket_ts")
         .collect()
     )
-    lo = (
-        locf_segmented(dense, "avg_v", segment="1d")
-        .orderBy("source", "bucket_ts")
-        .collect()
-    )
-    it = (
-        interpolate_segmented(dense, "avg_v", segment="1d")
-        .orderBy("source", "bucket_ts")
-        .collect()
-    )
+    lo = _segmented(dense, "locf", "1d").orderBy("source", "bucket_ts").collect()
+    it = _segmented(dense, "interp", "1d").orderBy("source", "bucket_ts").collect()
     assert [r["locf_v"] for r in both] == [r["avg_v"] for r in lo]
     assert [r["interp_v"] for r in both] == [r["avg_v"] for r in it]
     # the original value column rides through unchanged
@@ -178,39 +159,3 @@ def test_fill_segmented_shared_pass_equals_separate(spark):
         r["avg_v"]
         for r in dense.orderBy("source", "bucket_ts").collect()
     ]
-
-
-def test_align_series_for_binary_ops(spark):
-    from datetime import datetime
-
-    from workbook_exporter_fe_spark.operators.gapfill import align_series
-
-    def series(rows):
-        return spark.createDataFrame(
-            [("s", datetime(2026, 1, 1, 0, m), v) for m, v in rows],
-            "source string, bucket_ts timestamp, avg_v double",
-        )
-
-    # a: minutes 0,2,5 ; b: minutes 1,2,6 — spine must span 0..6
-    a = series([(0, 10.0), (2, 20.0), (5, 50.0)])
-    b = series([(1, 1.0), (2, 2.0), (6, 6.0)])
-    out = {
-        r["bucket_ts"].minute: (r["v_a"], r["v_b"])
-        for r in align_series(a, b, "1m").collect()
-    }
-    assert sorted(out) == [0, 1, 2, 3, 4, 5, 6]
-    assert out[0] == (10.0, None)          # b doesn't exist yet -> NULL
-    assert out[1] == (10.0, 1.0)           # a carried forward
-    assert out[2] == (20.0, 2.0)
-    assert out[3] == (20.0, 2.0) and out[4] == (20.0, 2.0)
-    assert out[5] == (50.0, 2.0)
-    assert out[6] == (50.0, 6.0)           # a carried to the union's end
-    # ratio (the point of aligning) is now well-defined wherever both exist
-    from pyspark.sql import functions as F
-
-    ratio = (
-        align_series(a, b, "1m")
-        .withColumn("r", F.col("v_a") / F.col("v_b"))
-        .filter(F.col("r").isNotNull())
-    )
-    assert ratio.count() == 6

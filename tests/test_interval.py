@@ -1,59 +1,10 @@
-"""interval_join: binned overlap join equals the naive cross-product
-formulation exactly, dedup included, and the plan is a real hash join.
-interval_union: running-max sweep islands equal a pure-python merge."""
+"""interval_union: running-max sweep islands equal a pure-python merge."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
-from workbook_exporter_fe_spark.operators.interval import (
-    interval_join,
-    interval_union,
-)
-
-
-@pytest.fixture(scope="module")
-def intervals(spark):
-    rng = np.random.default_rng(5)
-    base = pd.Timestamp("2026-01-01")
-
-    def mk(n, tag):
-        start = rng.integers(0, 86_400, n)
-        length = rng.integers(60, 14_400, n)  # 1 min .. 4 h — spans bins
-        return pd.DataFrame(
-            {
-                "key": rng.choice(["a", "b"], n),
-                f"{tag}_id": np.arange(n),
-                f"{tag}_start": base + pd.to_timedelta(start, unit="s"),
-                f"{tag}_end": base + pd.to_timedelta(start + length, unit="s"),
-            }
-        )
-
-    return spark.createDataFrame(mk(300, "l")), spark.createDataFrame(mk(200, "r"))
-
-
-def _pairs(df):
-    return sorted((r["l_id"], r["r_id"]) for r in df.select("l_id", "r_id").collect())
-
-
-@pytest.mark.parametrize("by", [None, "key"])
-def test_interval_join_matches_naive(spark, intervals, by):
-    ldf, rdf = intervals
-    got = interval_join(
-        ldf, rdf, "l_start", "l_end", "r_start", "r_end", by=by, bin_width_sec=1800
-    )
-    cond = (F.col("l_start") < F.col("r_end")) & (F.col("r_start") < F.col("l_end"))
-    if by:
-        naive = ldf.join(rdf.withColumnRenamed("key", "rkey"),
-                         cond & (F.col("key") == F.col("rkey")))
-    else:
-        naive = ldf.join(rdf.withColumnRenamed("key", "rkey"), cond)
-    assert _pairs(got) == _pairs(naive)
-    # no duplicate pairs from multi-bin overlaps
-    assert got.count() == got.select("l_id", "r_id").distinct().count()
+from workbook_exporter_fe_spark.operators.interval import interval_union
 
 
 def _merge_reference(ivs):
@@ -107,11 +58,3 @@ def test_interval_union_touching_and_coverage(spark):
     )
     out2 = interval_union(df2, "s", "e", key="k", as_long=True).collect()
     assert sum(r.island_end - r.island_start for r in out2) == 7
-
-
-def test_interval_join_plan_is_hash_join(spark, intervals):
-    ldf, rdf = intervals
-    plan = interval_join(
-        ldf, rdf, "l_start", "l_end", "r_start", "r_end", by="key"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "NestedLoop" not in plan  # the whole point: no O(n^2) join

@@ -16,7 +16,6 @@ from workbook_exporter_fe_spark.operators.multimodal import (
     decode_wav,
     extract_features,
     gen_media,
-    resize_images,
     sample_frames,
 )
 
@@ -126,26 +125,6 @@ def test_frame_sampling_extracts_real_frames(spark):
             + np.arange(v["width"] * v["height"])
         ) % 256
         assert np.array_equal(got, want.astype(np.uint8))
-
-
-def test_resize_images_real_nearest_neighbour(spark):
-    media = gen_media(spark, 90, seed=7)
-    out = resize_images(media, width=8, height=8).collect()
-    # only image rows survive, every payload exactly 3*w*h bytes (RGB)
-    assert len(out) == sum(1 for r in media.collect() if r.kind == "image")
-    assert all(len(bytes(r.payload)) == 3 * 64 for r in out)
-    assert all(r.width == 8 and r.height == 8 for r in out)
-    # pin one row against a numpy oracle of the same NN sampling
-    r0 = sorted(out, key=lambda r: r.media_id)[0]
-    src = {
-        r["media_id"]: bytes(r["payload"])
-        for r in media.filter(F.col("kind") == "image").collect()
-    }[r0.media_id]
-    sw, sh, px = decode_ppm(src)
-    img = px.reshape(sh, sw, 3)
-    yi = (np.arange(8) * sh) // 8
-    xi = (np.arange(8) * sw) // 8
-    assert bytes(r0.payload) == img[yi][:, xi].tobytes()
 
 
 def test_spectrogram_matches_direct_rfft():

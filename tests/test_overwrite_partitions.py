@@ -207,3 +207,73 @@ def test_incremental_publish_bucketed_spec_preserves_bucket_mates(
     got = sorted(map(tuple, t.read().collect()))
     want = sorted(map(tuple, updated.collect()))
     assert got == want  # bucket-mates on day 2 survived, s3 replaced
+
+
+def _republish_after(spark, out, tier, updated, batch, spec):
+    """Publish ``tier`` at ``spec``, swap the tier dir for ``updated`` (the
+    pipeline's in-place merge of ``batch``), publish incrementally; returns
+    (served rows, tier rows), both sorted."""
+    import shutil
+
+    from workbook_exporter_fe_spark.plans.pipeline import (
+        publish_snapshot_tiers,
+    )
+
+    tier.write.parquet(f"{out}/tier1")
+    publish_snapshot_tiers(spark, out, tier_names=("tier1",), spec=spec)
+    shutil.rmtree(f"{out}/tier1")
+    updated.write.parquet(f"{out}/tier1")
+    info = publish_snapshot_tiers(
+        spark, out, tier_names=("tier1",), changed=batch, spec=spec
+    )
+    t = SnapshotTable(spark, info["tier1"]["root"])
+    served = sorted(map(tuple, t.read().select(*updated.columns).collect()), key=repr)
+    return served, sorted(map(tuple, updated.collect()), key=repr)
+
+
+def _bump_day(tier, source_match, day):
+    lo = F.timestamp_seconds(F.lit(T0 + day * DAY))
+    hi = F.timestamp_seconds(F.lit(T0 + (day + 1) * DAY))
+    hit = source_match & (F.col("bucket_ts") >= lo) & (F.col("bucket_ts") < hi)
+    return tier.withColumn(
+        "sum_v", F.when(hit, F.col("sum_v") + 1e6).otherwise(F.col("sum_v"))
+    )
+
+
+def test_incremental_publish_identity_ts_spec_equals_full(spark, tmp_path):
+    """An identity transform of bucket_ts cannot be derived from event
+    timestamps (a batch event is not its bucket's start), so the publish
+    falls back to a full republish — the store equals the tier, never a
+    stale copy."""
+    tier = _rows(spark, range(6), ("s0", "s1"))
+    updated = _bump_day(tier, F.col("source") == "s1", 3)
+    batch = spark.range(1).select(
+        F.lit("s1").alias("source"),
+        F.timestamp_seconds(F.lit(T0 + 3 * DAY + 1234)).alias("event_ts"),
+    )
+    served, want = _republish_after(
+        spark, str(tmp_path / "out"), tier, updated, batch,
+        spec=("bucket_ts", "source"),
+    )
+    assert served == want
+
+
+def test_incremental_publish_null_source_partition(spark, tmp_path):
+    """A batch whose events carry a null source: the scoped publish must
+    match the (day, null) partition tuple null-safely and republish it."""
+    base = _rows(spark, range(4), ("s0", "s1"))
+    tier = base.unionByName(
+        base.filter(F.col("source") == "s0").withColumn(
+            "source", F.lit(None).cast("string")
+        )
+    )
+    updated = _bump_day(tier, F.col("source").isNull(), 2)
+    batch = spark.range(1).select(
+        F.lit(None).cast("string").alias("source"),
+        F.timestamp_seconds(F.lit(T0 + 2 * DAY + 60)).alias("event_ts"),
+    )
+    served, want = _republish_after(
+        spark, str(tmp_path / "out"), tier, updated, batch,
+        spec=("day(bucket_ts)", "source"),
+    )
+    assert served == want

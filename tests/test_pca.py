@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from workbook_exporter_fe_spark.operators.pca import (
     pca_fit,
@@ -101,40 +100,3 @@ def test_partitioning_invariance(emb):
     m8 = pca_fit(df.repartition(8))
     assert np.allclose(m1.components, m8.components, atol=1e-6)
     assert np.allclose(m1.eigenvalues, m8.eigenvalues, atol=1e-7)
-
-
-def test_pca_topk_recall_and_exact_scores(spark, emb):
-    """PCA-shortlist ANN: high recall vs brute force on the dominant-
-    variance data, and every returned cosine is the EXACT raw-space
-    score (same integer-scaled arithmetic as cosine_topk)."""
-    from workbook_exporter_fe_spark.operators.similarity import (
-        cosine_topk,
-        pca_topk,
-    )
-    from workbook_exporter_fe_spark.operators.pca import pca_fit
-
-    df, _ = emb
-    # the docstring recipe: L2-normalize before fitting/searching, so
-    # the subspace-L2 shortlist targets cosine neighbors
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("embedding"), lambda x: x * x),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
-    dfn = df.select(
-        "vec_id",
-        F.transform(F.col("embedding"), lambda x: x / norm).alias(
-            "embedding"
-        ),
-    )
-    model = pca_fit(dfn, k=4)
-    truth = cosine_topk(dfn, query_vec_id=0, k=10)
-    got = pca_topk(dfn, model, query_vec_id=0, k=10, shortlist=40)
-    t = {r.vec_id: r.cos for r in truth.collect()}
-    g = {r.vec_id: r.cos for r in got.collect()}
-    overlap = len(set(t) & set(g)) / 10.0
-    assert overlap >= 0.8, (overlap, sorted(t), sorted(g))
-    for vid in set(t) & set(g):
-        assert g[vid] == t[vid]  # exact rerank, bit-identical scores

@@ -99,7 +99,10 @@ def test_sketch_tiers_in_pipeline(spark, tmp_path):
     and whose finalized estimates track the exact tier counts."""
     from pyspark.sql import functions as F
 
-    from workbook_exporter_fe_spark.operators.tiers import sketch_finalize
+    from workbook_exporter_fe_spark.operators.tiers import (
+        distinct_sketch_finalize,
+        quantile_sketch_finalize,
+    )
 
     seq = gen_sequences(spark, 3000, seed=42)
     out = str(tmp_path / "out")
@@ -107,7 +110,10 @@ def test_sketch_tiers_in_pipeline(spark, tmp_path):
     assert {"sketch1", "sketch2", "sketch3"} <= set(t)
     # one sketch row per (source, bucket): aligned with the sum/max tier
     assert t["sketch1"].count() == t["tier1"].count()
-    fin = sketch_finalize(t["sketch2"])
+    fin = distinct_sketch_finalize(t["sketch2"]).join(
+        quantile_sketch_finalize(t["sketch2"]).drop("cnt"),
+        ["source", "bucket_ts"],
+    )
     joined = fin.join(
         t["tier2"].select("source", "bucket_ts", F.col("cnt").alias("cnt_t")),
         ["source", "bucket_ts"],
@@ -123,16 +129,17 @@ def test_sketch_tiers_in_pipeline(spark, tmp_path):
     assert t2["sketch2"].count() == t["sketch2"].count()
 
 
-def test_metrics_parquet_table(spark, tmp_path):
-    """The JSONL manifest is mirrored as a queryable parquet metrics table."""
+def test_manifest_stage_metrics(spark, tmp_path):
+    """The JSONL manifest records every stage with its metrics."""
     seq = gen_sequences(spark, 1000, seed=42)
     out = str(tmp_path / "out")
-    TierPipeline(spark, out).run(seq, run_fp="r1")
-    m = spark.read.parquet(f"{out}/_manifest/metrics")
-    stages = {r.stage for r in m.collect()}
+    pipe = TierPipeline(spark, out)
+    pipe.run(seq, run_fp="r1")
+    m = pipe.manifest.entries
+    stages = {e["stage"] for e in m}
     assert {"t0_eventize", "tier1_1m", "tier2_1h", "tier3_1d", "compress"} <= stages
-    comp = m.filter(m.stage == "compress").first()
-    assert comp.encode_ratio is not None and comp.rows_out > 0
+    comp = next(e for e in m if e["stage"] == "compress")
+    assert comp["encode_ratio"] is not None and comp["rows_out"] > 0
 
 
 def test_pipeline_late_delay_bounds_tier1(spark, tmp_path):
@@ -144,62 +151,17 @@ def test_pipeline_late_delay_bounds_tier1(spark, tmp_path):
 
     seq = gen_sequences(spark, 3000, seed=42)
     full = TierPipeline(spark, str(tmp_path / "full")).run(seq, run_fp="r1")
-    bounded = TierPipeline(
+    bounded_pipe = TierPipeline(
         spark, str(tmp_path / "bounded"), late_delay="interval 10 minutes"
-    ).run(seq, run_fp="r1")
+    )
+    bounded = bounded_pipe.run(seq, run_fp="r1")
     n_full, n_bounded = full["tier1"].count(), bounded["tier1"].count()
     assert 0 < n_bounded < n_full
     wm = full["events"].agg(F.max("event_ts")).first()[0]
     lo = wm - datetime.timedelta(minutes=10)
     assert bounded["tier1"].filter(F.col("bucket_ts") < F.lit(lo) - F.expr("interval 1 minute")).count() == 0
-    m = spark.read.parquet(f"{tmp_path}/bounded/_manifest/metrics")
-    assert m.filter(m.stage == "late_bound").count() == 1
-
-
-def test_rollup_at_routes_to_coarsest_tier(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from workbook_exporter_fe_spark.operators.tiers import rollup_at
-
-    seq = gen_sequences(spark, 3000, seed=42)
-    out = str(tmp_path / "out")
-    TierPipeline(spark, out).run(seq, run_fp="r1")
-
-    # '1d' answers come from the tier3 files, not tier1
-    d = rollup_at(spark, out, "1d")
-    files = d.inputFiles()
-    assert files and all("/tier3/" in f for f in files)
-
-    # non-calendar grain: '5m' re-aggregates tier1 and matches a direct
-    # re-aggregation of the same tier
-    five = rollup_at(spark, out, "5m")
-    t1 = spark.read.parquet(f"{out}/tier1")
-    bucket = F.timestamp_seconds(
-        F.floor(F.unix_timestamp(F.col("bucket_ts").cast("timestamp")) / 300) * 300
-    ).alias("bucket_ts")
-    want = (
-        t1.groupBy("source", bucket)
-        .agg(
-            F.sum("sum_v").alias("sum_v"),
-            F.min("min_v").alias("min_v"),
-            F.max("max_v").alias("max_v"),
-            F.sum("cnt").alias("cnt"),
-        )
-        .withColumn("avg_v", F.col("sum_v") / F.col("cnt"))
-    )
-    assert five.exceptAll(want).count() == 0 and want.exceptAll(five).count() == 0
-
-    # '4h' divides 3600 -> routed to tier2; total cnt matches tier1
-    four_h = rollup_at(spark, out, "4h")
-    assert all("/tier2/" in f for f in four_h.inputFiles())
-    assert (
-        four_h.agg(F.sum("cnt")).first()[0] == t1.agg(F.sum("cnt")).first()[0]
-    )
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        rollup_at(spark, out, "90s")
+    m = bounded_pipe.manifest.entries
+    assert sum(1 for e in m if e["stage"] == "late_bound") == 1
 
 
 def test_partition_scoped_merge_preserves_untouched_partitions(spark, tmp_path):

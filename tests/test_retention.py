@@ -6,10 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from workbook_exporter_fe_spark.operators.eventize import eventize
-from workbook_exporter_fe_spark.operators.retention import (
-    apply_retention,
-    surviving_sequences,
-)
+from workbook_exporter_fe_spark.operators.retention import apply_retention
 from workbook_exporter_fe_spark.operators.tiers import rollup_tier1
 from workbook_exporter_fe_spark.sources.datagen import gen_sequences, write_sequences
 
@@ -26,22 +23,6 @@ def test_retention_drops_only_old_buckets(spark, events):
     # retained rows are bit-identical to their tier-1 originals (row drops
     # only — no value mutation)
     assert kept.exceptAll(t1).count() == 0
-
-
-def test_surviving_sequences_token_equality(spark, sequences, events):
-    """Project retention back to sequences: survivors keep exact tokens."""
-    wm = events.agg(F.max("event_ts")).collect()[0][0]
-    kept_events = events.filter(
-        F.col("event_ts") > F.lit(wm) - F.expr("interval 10 minutes")
-    )
-    survivors = surviving_sequences(sequences, events, kept_events)
-    n = survivors.count()
-    assert 0 < n < sequences.count()
-    # byte-exact token arrays: anti-join on (doc_id, tokens) must be empty
-    mismatch = survivors.select("doc_id", "tokens").exceptAll(
-        sequences.select("doc_id", "tokens")
-    )
-    assert mismatch.count() == 0
 
 
 def test_write_read_roundtrip_token_equality(spark, sequences, tmp_path):

@@ -179,38 +179,6 @@ def test_rule_materializer_incremental(spark, tmp_path):
     assert seqs == {n: mat._table(n).current_sequence() for n in s3}
 
 
-def test_alert_transitions(spark, store):
-    from workbook_exporter_fe_spark.plans.rules import alert_transitions
-
-    alerts = RuleEngine(store).run(
-        [AlertingRule("MemHot", "mem_bytes > 50", for_s=300, step_s=60)]
-    )["MemHot"]
-    got = sorted(
-        (r["source"], int(r["ts"].timestamp()), r["event"])
-        for r in alert_transitions(alerts, labels=("source",)).collect()
-    )
-    # python reference over the same dense alert frame
-    rows = sorted(
-        (r["source"], int(r["ts"].timestamp()), r["state"])
-        for r in alerts.collect()
-    )
-    want = []
-    by_src = {}
-    for s, t, st in rows:
-        by_src.setdefault(s, []).append((t, st))
-    for s, seq in by_src.items():
-        prev = None
-        for i, (t, st) in enumerate(seq):
-            if prev is None or t - prev[0] > 60 or st != prev[1]:
-                want.append((s, t, st))
-            if i + 1 < len(seq) and seq[i + 1][0] - t > 60:
-                want.append((s, t + 60, "resolved"))
-            prev = (t, st)
-    assert got == sorted(want)
-    events = {e for _, _, e in got}
-    assert events == {"pending", "firing", "resolved"}
-
-
 def test_run_rules_cli_library_path(spark, tmp_path):
     """run_rules.py building blocks: YAML config -> store + rules ->
     incremental refresh; SnapshotTable sources are autodetected."""

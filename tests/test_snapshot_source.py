@@ -161,45 +161,6 @@ def test_stream_starting_latest(spark, table, tmp_path):
     )
 
 
-def test_stream_tier1_from_snapshot_log(spark, events, tmp_path):
-    """The engine's own streaming front end over the snapshot_log source:
-    tier-1 maintained by tailing the tier-0 SnapshotTable, buckets
-    identical to the batch rollup for every finalized window."""
-    from workbook_exporter_fe_spark.operators.tiers import rollup_tier1
-    from workbook_exporter_fe_spark.streaming.stream_rollup import (
-        stream_tiers_from_snapshot_log,
-    )
-
-    ev = events.select(
-        "source", F.col("event_ts").cast("timestamp"), "v", "doc_id"
-    )
-    first, second = (
-        ev.filter(F.dayofmonth("event_ts") % 2 == 0),
-        ev.filter(F.dayofmonth("event_ts") % 2 == 1),
-    )
-    st = SnapshotTable(spark, str(tmp_path / "events_tbl"))
-    st.commit(first)
-    tier1 = str(tmp_path / "tier1")
-    q = stream_tiers_from_snapshot_log(
-        spark, st.root, tier1, str(tmp_path / "ckpt")
-    )
-    try:
-        q.processAllAvailable()
-        st.commit(second)  # producer appends while the query runs
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.read.parquet(tier1)
-    want = rollup_tier1(st.read())
-    # append mode emits only watermark-finalized buckets: subset of the
-    # batch rollup with identical values, and both appends were consumed
-    assert got.exceptAll(want).count() == 0
-    assert got.count() > 0
-    assert got.select("source").distinct().count() == want.select(
-        "source"
-    ).distinct().count()
-
-
 # ------------------------------------------------------------- write side
 
 

@@ -151,34 +151,42 @@ def test_at_modifier_disables_pruning(spark, tier_out):
     )
 
 
-def test_run_tiers_snapshot_tiers_cli(spark, tmp_path, monkeypatch, capsys):
-    """--snapshot-tiers end-to-end: pipeline run → published store →
-    run_query prints the pruning line."""
+def _load(name):
     import importlib.util
     import os
+
+    spec = importlib.util.spec_from_file_location(
+        name, os.path.join(os.path.dirname(__file__), "..", f"{name}.py")
+    )
+    m = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(m)
+    return m
+
+
+def _run_tiers(spark, monkeypatch, capsys, *argv) -> dict:
+    """run_tiers.main() on the shared session; returns its JSON line."""
     import sys
 
-    def _load(name):
-        spec = importlib.util.spec_from_file_location(
-            name, os.path.join(os.path.dirname(__file__), "..", f"{name}.py")
-        )
-        m = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(m)
-        return m
-
-    out = str(tmp_path / "t")
-    rt = _load("run_tiers")
-    monkeypatch.setattr(sys, "argv", [
-        "run_tiers.py", "--generate", "4000", "--out", out,
-        "--snapshot-tiers",
-    ])
-    monkeypatch.setattr(rt, "get_spark", lambda **kw: spark, raising=False)
     import workbook_exporter_fe_spark.session as sess
 
+    rt = _load("run_tiers")
+    monkeypatch.setattr(sys, "argv", ["run_tiers.py", *argv])
     monkeypatch.setattr(sess, "get_spark", lambda **kw: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)
     rt.main()
-    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_run_tiers_snapshot_tiers_cli(spark, tmp_path, monkeypatch, capsys):
+    """--snapshot-tiers end-to-end: pipeline run → published store →
+    run_query prints the pruning line."""
+    import sys
+
+    out = str(tmp_path / "t")
+    rep = _run_tiers(
+        spark, monkeypatch, capsys,
+        "--generate", "4000", "--out", out, "--snapshot-tiers",
+    )
     st = rep["snapshot_tiers"]
     assert set(st) == {"tier1", "tier2", "tier3"}
     assert all(v["files"] > 0 for v in st.values())
@@ -195,3 +203,57 @@ def test_run_tiers_snapshot_tiers_cli(spark, tmp_path, monkeypatch, capsys):
     lines = capsys.readouterr().out.strip().splitlines()
     prune = json.loads(lines[-1])
     assert "pruning" in prune and "tok" in prune["pruning"]
+
+
+def test_restricted_lazy_store_keeps_query_range_pruning(spark, tier_out):
+    """A rule refresh's restricted view (rules._restrict) intersects a
+    query_range's prune window with its own history cut instead of
+    replacing it: a one-day query opens ≈ that day's files, and its rows
+    equal the restricted eager store's."""
+    from workbook_exporter_fe_spark.plans.rules import _restrict
+
+    out, info = tier_out
+    since = T0 - DAY  # before the table's first bucket: keeps every file
+    lazy = _restrict(_store(spark, info["tier1"]["root"]), since)
+    eager = _restrict(_store(spark, f"{out}/tier1"), since)
+    expr = "avg_over_time(tok[2h])"
+    start, end = T0 + 10 * DAY, T0 + 11 * DAY
+    got = query_range(lazy, expr, start, end, step="1h").collect()
+    want = query_range(eager, expr, start, end, step="1h").collect()
+    key = lambda r: (r.source, r.ts)  # noqa: E731
+    assert sorted(got, key=key) == sorted(want, key=key) and len(got) > 0
+    opened = lazy.pruning_stats["tok"]["files_opened"]
+    assert opened < info["tier1"]["files"]
+    assert opened <= 6
+
+
+def test_run_tiers_backfill_republishes_snapshot_tiers(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """--backfill with --snapshot-tiers: the corrected window is what the
+    serving store holds afterwards, for every tier."""
+    from workbook_exporter_fe_spark.sources.snapshots import SnapshotTable
+
+    out = str(tmp_path / "t")
+    _run_tiers(
+        spark, monkeypatch, capsys,
+        "--generate", "4000", "--out", out, "--snapshot-tiers",
+    )
+    ev = spark.read.parquet(f"{out}/events")
+    lo, hi = ev.agg(F.min("event_ts"), F.max("event_ts")).first()
+    start = lo.replace(second=0, microsecond=0).isoformat()
+    end = (hi + (hi - lo) / 2).isoformat()
+    fixed = str(tmp_path / "fixed")
+    ev.withColumn("v", F.col("v") * 2 + 1).write.parquet(fixed)
+    rep = _run_tiers(
+        spark, monkeypatch, capsys,
+        "--backfill", f"{start}..{end}", "--events", fixed, "--out", out,
+        "--snapshot-tiers",
+    )
+    assert rep["replaced"]["tier1"] > 0
+    for name in ("tier1", "tier2", "tier3"):
+        tier = spark.read.parquet(f"{out}/{name}")
+        served = SnapshotTable(spark, f"{out}/snapshot_tiers/{name}").read()
+        cols = sorted(tier.columns)
+        assert served.select(*cols).exceptAll(tier.select(*cols)).isEmpty(), name
+        assert tier.select(*cols).exceptAll(served.select(*cols)).isEmpty(), name

@@ -63,50 +63,3 @@ def test_streaming_foreachbatch_merge_sink(spark, events, tmp_path):
     assert got.exceptAll(want).count() == 0
     assert got.count() > 0
 
-
-def test_session_window_stream_matches_batch(spark, events, tmp_path):
-    """Native session_window sessionization: the streamed result (complete
-    mode) equals the batch session_window result, and both agree with a
-    first-principles gap-scan on session membership."""
-    from workbook_exporter_fe_spark.streaming.stream_rollup import stream_sessions
-
-    src = str(tmp_path / "events")
-    _land_events(spark, events, src)
-    static = spark.read.parquet(src)
-    gap = "5 minutes"
-
-    batch = stream_sessions(static, gap=gap)
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
-    q = (
-        stream_sessions(stream, gap=gap, watermark="10 minutes")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_stream")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("SELECT * FROM sess_stream")
-    assert got.exceptAll(batch).count() == 0
-    assert batch.exceptAll(got).count() == 0
-
-    # first-principles check: session count per source == number of gaps > 5m
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("source").orderBy("event_ts")
-    gaps = static.withColumn(
-        "new_sess",
-        (
-            F.col("event_ts").cast("long")
-            - F.lag(F.col("event_ts").cast("long")).over(w)
-            >= 300
-        ).cast("int"),
-    )
-    want_n = (
-        gaps.groupBy("source")
-        .agg((F.coalesce(F.sum("new_sess"), F.lit(0)) + 1).alias("n"))
-    )
-    got_n = batch.groupBy("source").agg(F.count("*").alias("n"))
-    assert got_n.exceptAll(want_n).count() == 0

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from workbook_exporter_fe_spark.operators.unigram import (
     _lattice_expectations,
     _viterbi,
-    corpus_loglik,
     unigram_encode,
     unigram_train,
     unigram_train_local,
@@ -121,21 +120,6 @@ def test_em_increases_likelihood():
         lls.append(ll(model))
     assert all(b >= a - 1e-9 for a, b in zip(lls, lls[1:])), lls
     assert lls[-1] > lls[0]  # and it actually moved
-
-
-def test_corpus_loglik_distributed_matches_local(spark):
-    words = spark.createDataFrame(
-        list(CORPUS.items()), "word string, freq long"
-    )
-    model = unigram_train_local(
-        CORPUS, vocab_size=30, max_piece_len=4, seed_size=50,
-        em_iters=1, max_rounds=1,
-    )
-    got = corpus_loglik(words, model, max_piece_len=4)
-    want = sum(
-        f * _lattice_expectations(w, model, 4)[1] for w, f in CORPUS.items()
-    )
-    assert got == pytest.approx(want, abs=1e-6)
 
 
 def test_mstep_insertion_order_independent():

@@ -1,8 +1,7 @@
 """Vocabulary analytics: n-gram counts, first-seen, growth, new-token rate.
 
 Oracles: DuckDB list/unnest SQL over the same synthetic sequences
-(exact), plus an in-Spark cross-check pinning the packed-int64 bigram
-path to the general array-keyed n-gram path.
+(exact).
 """
 
 from __future__ import annotations
@@ -14,7 +13,6 @@ from pyspark.sql import functions as F
 from workbook_exporter_fe_spark.operators.vocab import (
     new_token_rate,
     token_bigram_counts,
-    token_ngram_counts,
     vocab_first_seen,
     vocab_growth,
 )
@@ -55,33 +53,6 @@ def test_bigram_counts_vs_duckdb(sequences, duck_seq):
     assert len(got) == len(want)
     for s, a, b, n in want:
         assert got[(s, a, b)] == n
-
-
-def test_bigram_equals_general_ngram(sequences):
-    packed = token_bigram_counts(sequences).select(
-        "source", F.array("gram_a", "gram_b").alias("gram"), "n"
-    )
-    general = token_ngram_counts(sequences, n=2)
-    assert packed.exceptAll(general).count() == 0
-    assert general.exceptAll(packed).count() == 0
-
-
-def test_trigram_counts_vs_duckdb(sequences, duck_seq):
-    got = {
-        (r["source"], tuple(r["gram"])): r["n"]
-        for r in token_ngram_counts(sequences, n=3).collect()
-    }
-    want = duck_seq.execute(
-        """
-        SELECT source, tokens[i] AS a, tokens[i + 1] AS b, tokens[i + 2] AS c,
-               COUNT(*) AS n
-        FROM (SELECT source, tokens, unnest(range(1, len(tokens) - 1)) AS i FROM seq)
-        GROUP BY 1, 2, 3, 4
-        """
-    ).fetchall()
-    assert len(got) == len(want)
-    for s, a, b, c, n in want:
-        assert got[(s, (a, b, c))] == n
 
 
 def test_min_count_filter(sequences):
@@ -187,87 +158,3 @@ def test_bigram_pmi_flags_collocations(spark):
     out = {(r.gram_a, r.gram_b): r.pmi for r in bigram_pmi(df, min_count=3).collect()}
     colloc = out[(1, 2)]
     assert all(colloc > v for k, v in out.items() if k != (1, 2))
-
-
-@pytest.fixture(scope="module")
-def word_docs(spark):
-    # Zipf-ish: token w{k} appears ~ 200/k times, mixed across two sources
-    rows = []
-    i = 0
-    for k in range(1, 40):
-        for _ in range(max(200 // k, 1)):
-            rows.append((i, "s" + str(i % 2), f"w{k} filler{i % 7}"))
-            i += 1
-    return spark.createDataFrame(rows, "doc_id long, source string, text string")
-
-
-def test_vocab_stats_vs_duckdb(word_docs):
-    from workbook_exporter_fe_spark.operators.vocab import vocab_stats
-
-    got = {r.source: r.asDict() for r in vocab_stats(word_docs).collect()}
-    con = duckdb.connect()
-    con.register("d", word_docs.toPandas())
-    want = con.execute(
-        """
-        WITH wc AS (
-          SELECT source, word, COUNT(*) AS n
-          FROM (SELECT source, UNNEST(string_split(text, ' ')) AS word FROM d)
-          GROUP BY 1, 2
-        )
-        SELECT source, SUM(n) AS n_tokens, COUNT(*) AS n_types,
-               ROUND(COUNT(*) / SUM(n), 6) AS ttr,
-               SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS hapax,
-               ROUND(SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) / COUNT(*), 6)
-                 AS hapax_ratio
-        FROM wc GROUP BY source
-        """
-    ).fetchall()
-    for s, n_tokens, n_types, ttr, hapax, hapax_ratio in want:
-        g = got[s]
-        assert (g["n_tokens"], g["n_types"], g["hapax"]) == (
-            n_tokens, n_types, hapax,
-        )
-        assert g["ttr"] == pytest.approx(ttr)
-        assert g["hapax_ratio"] == pytest.approx(hapax_ratio)
-
-
-def test_zipf_fit_vs_duckdb_and_shape(word_docs):
-    from workbook_exporter_fe_spark.operators.vocab import zipf_fit
-
-    got = {r.source: r for r in zipf_fit(word_docs, top_n=30).collect()}
-    con = duckdb.connect()
-    con.register("d", word_docs.toPandas())
-    want = con.execute(
-        """
-        WITH wc AS (
-          SELECT source, word, COUNT(*) AS n
-          FROM (SELECT source, UNNEST(string_split(text, ' ')) AS word FROM d)
-          GROUP BY 1, 2
-        ),
-        top AS (
-          SELECT source, n,
-                 row_number() OVER (PARTITION BY source
-                                    ORDER BY n DESC, word) AS rank
-          FROM wc QUALIFY rank <= 30
-        ),
-        p AS (
-          SELECT source,
-                 CAST(ROUND(ln(CAST(rank AS DOUBLE)), 6) AS DECIMAL(38,12)) AS x,
-                 CAST(ROUND(ln(CAST(n AS DOUBLE)), 6) AS DECIMAL(38,12)) AS y
-          FROM top
-        )
-        SELECT source, COUNT(*) AS k,
-               CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
-               CAST(SUM(x * y) AS DOUBLE) AS sxy,
-               CAST(SUM(x * x) AS DOUBLE) AS sxx
-        FROM p GROUP BY source
-        """
-    ).fetchall()
-    for s, k, sx, sy, sxy, sxx in want:
-        slope = (k * sxy - sx * sy) / (k * sxx - sx * sx)
-        g = got[s]
-        assert g.n_used == k
-        assert g.slope == pytest.approx(round(slope, 6))
-        assert g.intercept == pytest.approx(round((sy - slope * sx) / k, 6))
-        # Zipf-shaped input: exponent near -1, certainly negative
-        assert g.slope < -0.5

@@ -109,17 +109,3 @@ def decompress_chunks(chunks: DataFrame, value_col: str = "avg_v") -> DataFrame:
                 yield pd.concat(frames, ignore_index=True)
 
     return chunks.mapInPandas(decode_batch, schema=out_schema)
-
-
-def encode_ratio(chunks: DataFrame) -> DataFrame:
-    """Per-source compression metrics: raw vs encoded bytes (16B/point raw)."""
-    return chunks.groupBy("source").agg(
-        F.sum("n_points").alias("points"),
-        F.sum(F.octet_length("ts_payload") + F.octet_length("v_payload")).alias(
-            "encoded_bytes"
-        ),
-        (
-            F.sum(F.octet_length("ts_payload") + F.octet_length("v_payload"))
-            / (F.sum("n_points") * 16.0)
-        ).alias("ratio"),
-    )

@@ -423,9 +423,9 @@ def incremental_keep(
     A new doc is dropped when it cross-matches any EXISTING doc (the
     corpus already has it), or when it is a non-canonical member of a
     batch-internal near-dup cluster (transitive closure over the
-    within-batch pairs, canonical = min doc_id — the same policy as
-    dedup_canonical). Pure composition: one anti-join + one
-    connected-components pass over the (small) batch pair graph.
+    within-batch pairs, canonical = min doc_id). Pure composition: one
+    anti-join + one connected-components pass over the (small) batch pair
+    graph.
 
     The index stores ids as STRING (MinHashIndex.sign), so every join
     here compares on the caller's id CAST to string — joining a numeric
@@ -471,77 +471,3 @@ def incremental_keep(
         .select(F.col("id").alias(sid))
     )
     return fresh.join(non_canonical, sid, "anti").drop(sid)
-
-
-class ExactHashIndex:
-    """Persisted content-hash registry for incremental EXACT dedup — the
-    companion to :class:`MinHashIndex` for the verbatim-duplicate case.
-
-    State per indexed doc is ONE (content_hash, doc_id) row (the hash of
-    the token array, not the tokens), so deduplicating a batch against a
-    100 TB corpus touches a relation ~1e-4 its size: one anti-join for
-    the survivors, one within-batch keep-min pass, one append commit.
-    Same crash contract and epoch-summary hooks as MinHashIndex.
-    """
-
-    def __init__(self, spark, root: str, hash_fn: str = "xxhash64"):
-        from workbook_exporter_fe_spark.sources.snapshots import SnapshotTable
-
-        if hash_fn not in ("xxhash64", "md5"):
-            raise ValueError(hash_fn)
-        self.spark = spark
-        self.hash_fn = hash_fn
-        self.table = SnapshotTable(spark, root)
-        if self.table.current_sequence() > 0:
-            stored = self.table.snapshot(1)["summary"].get("hash_fn")
-            if stored is not None and stored != hash_fn:
-                raise ValueError(
-                    f"index at {root!r} uses hash_fn={stored!r}"
-                )
-
-    def _hash(self, tokens_col: str):
-        c = F.col(tokens_col)
-        if self.hash_fn == "xxhash64":
-            return F.xxhash64(c).cast("string")
-        return F.md5(F.to_json(c))
-
-    def hashes(self) -> DataFrame:
-        if self.table.current_sequence() == 0:
-            return self.spark.createDataFrame(
-                [], "content_hash string, doc_id string"
-            )
-        return self.table.read()
-
-    def add_batch(
-        self,
-        docs: DataFrame,
-        tokens_col: str = "tokens",
-        id_col: str = "doc_id",
-        extra_summary: dict | None = None,
-    ) -> DataFrame:
-        """Returns the batch's SURVIVORS (first-seen-corpus-wide wins;
-        min id within the batch) and appends their hashes to the index.
-        Committing only survivors keeps the registry one-row-per-content
-        forever, so the anti-join side never accumulates duplicates."""
-        hashed = docs.withColumn("content_hash", self._hash(tokens_col))
-        fresh = hashed.join(
-            self.hashes().select("content_hash"), "content_hash", "anti"
-        )
-        w = Window.partitionBy("content_hash").orderBy(id_col)
-        kept = (
-            fresh.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        ).localCheckpoint(eager=True)
-        summary = {"hash_fn": self.hash_fn, "batch_docs": kept.count()}
-        summary.update(extra_summary or {})
-        self.table.commit(
-            # ids normalize to string like MinHashIndex.sign — the stored
-            # relation is one schema forever; a numeric-id batch would
-            # otherwise hit a SchemaMismatch on the second commit
-            kept.select(
-                "content_hash", F.col(id_col).cast("string").alias("doc_id")
-            ),
-            summary=summary,
-        )
-        return kept.drop("content_hash")

@@ -3,9 +3,8 @@
 A 100 TB training-data pipeline monitors WHAT is flowing, not just how
 much: a source whose token distribution shifts (new scrape mix, encoding
 bug, injected spam) should trip an alarm long before loss curves do.
-This module scores each rolled-up histogram (operators/tiers.py
-token_histogram tier: map<token,count> per (source, bucket)) against a
-baseline distribution:
+This module scores each rolled-up token histogram (a map<token,count>
+per (source, bucket)) against a baseline distribution:
 
 - ``histogram_drift(cur, base)`` — each current row vs a per-key
   baseline histogram (e.g. the trailing-week merge);

@@ -41,52 +41,3 @@ def eventize(sequences: DataFrame, epoch0: str = EPOCH0) -> DataFrame:
         "doc_id",
         "tokens",
     )
-
-
-def inject_gaps(events: DataFrame, seed: int = 42, mod: int = 10) -> tuple[DataFrame, DataFrame]:
-    """Drop ~1/mod of events deterministically (gap-fill test harness).
-
-    Returns (gapped, dropped) — `dropped` is the interpolation oracle.
-    """
-    is_gap = F.pmod(F.xxhash64(F.lit(seed), F.col("doc_id")), F.lit(mod)) == 0
-    flagged = events.withColumn("_gap", is_gap)
-    return (
-        flagged.filter(~F.col("_gap")).drop("_gap"),
-        flagged.filter(F.col("_gap")).drop("_gap"),
-    )
-
-
-def eventize_dense(
-    sequences: DataFrame, epoch0: str = EPOCH0, docs_per_sec: int = 1
-) -> DataFrame:
-    """Map-side eventization: ts derives from the doc_id's numeric suffix.
-
-    ``eventize`` ranks within each source, which is faithful to FIXTURES F2
-    but costs a per-source sort — and the Zipf-hot source (~29% of rows) is
-    ONE sort task, the single-task bottleneck that dominates corpus
-    generation beyond ~10^8 rows (measured: a 750M-row eventize did not
-    finish its hot-source sort in 50 minutes on 32 cores). This variant
-    reads the event time straight off the data (`doc-%012d` → i seconds
-    after epoch0): zero shuffles, scan-speed at any scale, still a pure
-    function of data values (repartition-stable). Per-source streams share
-    the global doc clock, so each source's timeline has gaps where other
-    sources' docs sit — fine for rollup/gap-fill benchmarks, NOT
-    fixture-F2-equal. In production the input carries real timestamps and
-    neither variant exists.
-
-    ``docs_per_sec`` compresses the global clock (ts = epoch0 + idx DIV
-    docs_per_sec): at corpus scale set it ≈ the source count so per-source
-    bucket density matches the ranked variant (~60 events per source per
-    1m bucket), keeping the rollup's reduction ratio representative."""
-    idx = F.substring("doc_id", 5, 12).cast("long")
-    secs = (idx / F.lit(docs_per_sec)).cast("long") if docs_per_sec != 1 else idx
-    return sequences.select(
-        "source",
-        (
-            F.to_timestamp(F.lit(epoch0))
-            + F.make_interval(secs=secs.cast("double"))
-        ).alias("event_ts"),
-        F.col("n_tok").cast("double").alias("v"),
-        "doc_id",
-        "tokens",
-    )

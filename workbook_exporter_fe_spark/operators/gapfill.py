@@ -157,74 +157,6 @@ def _segment_carries(
     )
 
 
-def locf_segmented(
-    dense: DataFrame, value_col: str = "avg_v", key: str = "source",
-    segment: str = "1d",
-) -> DataFrame:
-    """LOCF with (source, segment)-parallel windows; equals ``locf``."""
-    ws = _with_segment(dense, segment)
-    w = (
-        Window.partitionBy(key, "_seg")
-        .orderBy("bucket_ts")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = F.last(value_col, ignorenulls=True).over(w)
-    carries = _segment_carries(ws, value_col, key).select(
-        key, "_seg", "carry_prev_v"
-    )
-    return (
-        ws.withColumn("_local", local)
-        .join(carries, [key, "_seg"])
-        .withColumn(value_col, F.coalesce(F.col("_local"), F.col("carry_prev_v")))
-        .drop("_seg", "_local", "carry_prev_v")
-    )
-
-
-def interpolate_segmented(
-    dense: DataFrame, value_col: str = "avg_v", key: str = "source",
-    segment: str = "1d",
-) -> DataFrame:
-    """Linear interpolation with (source, segment)-parallel windows; equals
-    ``interpolate`` (prev/next neighbours cross segment edges via the
-    carry summary)."""
-    ws = _with_segment(dense, segment)
-    v = F.col(value_col)
-    wb = (
-        Window.partitionBy(key, "_seg")
-        .orderBy("bucket_ts")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wf = (
-        Window.partitionBy(key, "_seg")
-        .orderBy(F.col("bucket_ts").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ts_obs = F.when(v.isNotNull(), F.col("bucket_ts"))
-    step = (
-        ws.withColumn("_lpv", F.last(v, ignorenulls=True).over(wb))
-        .withColumn("_lpt", F.last(ts_obs, ignorenulls=True).over(wb))
-        .withColumn("_lnv", F.last(v, ignorenulls=True).over(wf))
-        .withColumn("_lnt", F.last(ts_obs, ignorenulls=True).over(wf))
-    )
-    joined = step.join(_segment_carries(ws, value_col, key), [key, "_seg"])
-    prev_v = F.coalesce(F.col("_lpv"), F.col("carry_prev_v"))
-    prev_t = F.coalesce(F.col("_lpt"), F.col("carry_prev_t")).cast("double")
-    next_v = F.coalesce(F.col("_lnv"), F.col("carry_next_v"))
-    next_t = F.coalesce(F.col("_lnt"), F.col("carry_next_t")).cast("double")
-    t = F.col("bucket_ts").cast("double")
-    frac = (t - prev_t) / (next_t - prev_t)
-    filled = (
-        F.when(v.isNotNull(), v)
-        .when(prev_v.isNull(), next_v)
-        .when(next_v.isNull(), prev_v)
-        .otherwise(prev_v + (next_v - prev_v) * frac)
-    )
-    return joined.withColumn(value_col, filled).drop(
-        "_seg", "_lpv", "_lpt", "_lnv", "_lnt",
-        "carry_prev_v", "carry_prev_t", "carry_next_v", "carry_next_t",
-    )
-
-
 def fill_segmented(
     dense: DataFrame,
     fills: dict[str, str],
@@ -234,12 +166,12 @@ def fill_segmented(
 ) -> DataFrame:
     """Several segmented fills of ``value_col`` in ONE carry pass.
 
-    ``fills`` maps output column → method ('locf' | 'interp'). Equivalent
-    to running ``locf_segmented`` and ``interpolate_segmented`` separately
-    (bit-identical, pinned by tests) but computes the per-segment window
-    lookups and the cross-segment carry summary ONCE and derives every
-    requested fill as a projection over them — the q64 gate query formerly
-    built the carry lineage + join twice (2.4× the cost of one pass).
+    ``fills`` maps output column → method ('locf' | 'interp'). Within each
+    ``segment`` the fills equal plain ``locf``/``interpolate`` (pinned by
+    tests); the per-segment window lookups and the cross-segment carry
+    summary are computed ONCE and every requested fill is a projection
+    over them — building the carry lineage + join once per fill costs
+    2.4× as much.
     """
     for how in fills.values():
         if how not in ("locf", "interp"):
@@ -274,7 +206,7 @@ def fill_segmented(
     for out_col, how in fills.items():
         if how == "locf":
             # _lpv's running frame includes the current row, so this IS
-            # locf_segmented's coalesce(local, carry_prev_v)
+            # coalesce(local, carry_prev_v)
             expr = prev_v
         else:
             expr = (
@@ -287,43 +219,4 @@ def fill_segmented(
     return out.drop(
         "_seg", "_lpv", "_lpt", "_lnv", "_lnt",
         "carry_prev_v", "carry_prev_t", "carry_next_v", "carry_next_t",
-    )
-
-
-def align_series(
-    a: DataFrame,
-    b: DataFrame,
-    step: str = "1m",
-    value_col: str = "avg_v",
-    key: str = "source",
-    how: str = "locf",
-) -> DataFrame:
-    """Align two tier series onto one dense bucket spine per key —
-    the prerequisite for binary operations between metrics (PromQL's
-    `a / b`, error-rate = errors/requests, etc.), which are only
-    well-defined once both operands exist at every evaluated bucket.
-
-    The spine spans the UNION of both series' ranges per key; each side
-    is gap-filled independently (``how``: 'locf' or 'interp') and emitted
-    as (key, bucket_ts, v_a, v_b). Buckets before a series' first
-    observation keep NULL under 'locf' (nothing to carry), mirroring how
-    a metrics engine treats a series that does not exist yet.
-
-    Scale: one union + the same spine/left-join/window shapes as
-    densify/locf — no new plan primitives; both fills share the spine's
-    partitioning so Catalyst computes them over one sort per side.
-    """
-    if how not in ("locf", "interp"):
-        raise ValueError(how)
-    ua = a.select(F.col(key), "bucket_ts", F.col(value_col).alias("_va"))
-    ub = b.select(F.col(key), "bucket_ts", F.col(value_col).alias("_vb"))
-    both = ua.select(key, "bucket_ts").unionByName(ub.select(key, "bucket_ts"))
-    spine = bucket_spine(both, step, key)
-    dense = spine.join(ua, [key, "bucket_ts"], "left").join(
-        ub, [key, "bucket_ts"], "left"
-    )
-    fill = locf if how == "locf" else interpolate
-    out = fill(fill(dense, "_va", key), "_vb", key)
-    return out.select(
-        key, "bucket_ts", F.col("_va").alias("v_a"), F.col("_vb").alias("v_b")
     )

@@ -25,50 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _with_bins(df: DataFrame, start: str, end: str, width: int, side: str) -> DataFrame:
-    s = F.col(start).cast("timestamp").cast("long")
-    e = F.col(end).cast("timestamp").cast("long")
-    bins = F.sequence(F.floor(s / width), F.floor((e - 1) / width))
-    return (
-        df.withColumn(f"_{side}s", s)
-        .withColumn(f"_{side}e", e)
-        .withColumn("_bin", F.explode(bins))
-    )
-
-
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    l_start: str,
-    l_end: str,
-    r_start: str,
-    r_end: str,
-    by: str | None = None,
-    bin_width_sec: int = 3600,
-) -> DataFrame:
-    """All (left, right) row pairs whose [start, end) intervals overlap
-    (optionally also matching on ``by``), via bin-equi-join + residual.
-
-    Output = left columns + right columns; right columns whose name
-    collides with a left column (other than ``by``) come back suffixed
-    ``_r``.
-    """
-    collisions = [c for c in right.columns if c in left.columns and c != by]
-    for c in collisions:
-        right = right.withColumnRenamed(c, c + "_r")
-    ren = {c: (c + "_r" if c in collisions else c) for c in (r_start, r_end)}
-    lb = _with_bins(left, l_start, l_end, bin_width_sec, "l")
-    rb = _with_bins(right, ren[r_start], ren[r_end], bin_width_sec, "r")
-    on = ["_bin", by] if by else ["_bin"]
-    j = lb.join(rb, on)
-    overlap = (F.col("_ls") < F.col("_re")) & (F.col("_rs") < F.col("_le"))
-    first_shared_bin = F.col("_bin") == F.greatest(
-        F.floor(F.col("_ls") / bin_width_sec), F.floor(F.col("_rs") / bin_width_sec)
-    )
-    out_cols = list(left.columns) + [c for c in right.columns if c != by]
-    return j.filter(overlap & first_shared_bin).select(*out_cols)
-
-
 def interval_union(
     df: DataFrame,
     start: str,

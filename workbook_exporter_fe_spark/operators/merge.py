@@ -4,9 +4,8 @@ The reference's one real optimization is incremental idempotent processing:
 anti-join each row against the existing output (`ip_exists_in_yaml`,
 /root/reference/workbook_exporter-fe.py:1741-1754, SURVEY §2 O15) and
 merge-upsert new entries into it (`write_yaml`, :1758-1767, O19). Here that
-becomes set-based DataFrame ops plus an Iceberg-style MERGE with a
-hive-parquet fallback (SURVEY §7: no Iceberg jar in this sandbox — the
-``TableIO`` seam keeps both backends behind one API).
+becomes set-based DataFrame ops plus a MERGE against hive-partitioned
+parquet (partition-scoped staging swap).
 
 Scale design: `merge_upsert` is a left-anti join (existing minus updated
 keys) + union. When the *new* side is small relative to existing (the usual
@@ -21,50 +20,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def anti_join_state(
-    new: DataFrame,
-    existing: DataFrame,
-    keys: list[str],
-    existing_stats=None,
-    broadcast_bytes: int = 64 << 20,
-) -> DataFrame:
+def anti_join_state(new: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
     """Rows of `new` whose key is NOT already in `existing` (O15, set-based).
 
-    The existing-keys side is deduplicated and broadcast when small.
-    Without stats, Catalyst/AQE decides from runtime sizes; pass
-    ``existing_stats`` (operators/joinplan.TableStats, manifest-derived)
-    and the broadcast hint is decided from METADATA before any scan —
-    the r5 stats→planning loop (VERDICT r4 item #2).
+    The existing-keys side is deduplicated; Catalyst/AQE picks the join
+    strategy from runtime sizes.
     """
     keys_side = existing.select(*keys).dropDuplicates(keys)
-    if existing_stats is not None and existing_stats.bytes <= broadcast_bytes:
-        keys_side = F.broadcast(keys_side)
     return new.join(keys_side, keys, "left_anti")
 
 
-def merge_upsert(
-    existing: DataFrame,
-    new: DataFrame,
-    keys: list[str],
-    new_stats=None,
-    broadcast_bytes: int = 64 << 20,
-) -> DataFrame:
+def merge_upsert(existing: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
     """Insert-or-replace per key: rows in `new` win (O19).
 
     Equivalent to `MERGE INTO existing USING new ON keys WHEN MATCHED THEN
     UPDATE * WHEN NOT MATCHED THEN INSERT *` — idempotent: merging the same
     `new` twice yields the same table.
 
-    The new-keys side broadcasts by default (the usual incremental case:
-    a small batch against a big table). With ``new_stats`` (manifest-
-    derived TableStats) the hint is dropped when the batch is genuinely
-    big — forcing a 100 GB broadcast would OOM the driver; the plain
-    exchange is correct there.
+    The new-keys side is broadcast (the incremental case: a small batch
+    against a big table).
     """
     new = new.select(*existing.columns)
-    keys_side = new.select(*keys).dropDuplicates(keys)
-    if new_stats is None or new_stats.bytes <= broadcast_bytes:
-        keys_side = F.broadcast(keys_side)
+    keys_side = F.broadcast(new.select(*keys).dropDuplicates(keys))
     kept = existing.join(keys_side, keys, "left_anti")
     return kept.unionByName(new)
 
@@ -129,7 +106,7 @@ def merge_tier_additive_path(
 def merge_upsert_path(
     spark, path: str, new: DataFrame, keys: list[str], partition_col: str | None = None
 ) -> None:
-    """MERGE against a parquet table on disk (hive-style fallback backend).
+    """MERGE against a parquet table on disk (hive-style layout).
 
     With ``partition_col`` (one of ``keys``, e.g. ``source``) the table is
     laid out hive-partitioned and the merge is PARTITION-SCOPED: only the
@@ -138,9 +115,6 @@ def merge_upsert_path(
     mtimes), which is the `replaceWhere` shape a 100 TB merge needs instead
     of staging the whole table. Without ``partition_col`` (or on a legacy
     unpartitioned layout) it falls back to full read→merge→staging-swap.
-    With an Iceberg catalog configured either shape is a single
-    ``spark.sql("MERGE INTO ...")`` — gated behind the same signature
-    (sources/tableio.py).
     """
     import os
     import shutil

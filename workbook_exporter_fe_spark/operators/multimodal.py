@@ -322,43 +322,6 @@ def sample_frames(
     )
 
 
-def resize_images(
-    media: DataFrame, width: int = 64, height: int = 64
-) -> DataFrame:
-    """(media_id, width, height, payload binary): REAL 2-D nearest-neighbour
-    resize of the decoded PPM pixel grid to width×height RGB.
-
-    Only rows with kind='image' are read (plan-side pruning), and output
-    payload size is bounded at 3·width·height bytes regardless of input
-    size — the property that makes the shuffle/write after a resize
-    predictable at 100 TB."""
-    out_schema = "media_id string, width int, height int, payload binary"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for p in pdf["payload"]:
-                sw, sh, px = decode_ppm(bytes(p))
-                img = px.reshape(sh, sw, 3)
-                yi = (np.arange(height) * sh) // height
-                xi = (np.arange(width) * sw) // width
-                payloads.append(img[yi][:, xi].tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": payloads,
-                }
-            )
-
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "payload")
-        .mapInPandas(run, schema=out_schema)
-    )
-
-
 def spectrogram(samples: np.ndarray, n_fft: int = 8) -> np.ndarray:
     """Power spectrogram (|rfft|²) over non-overlapping boxcar frames;
     the trailing partial frame is dropped. Pure numpy — the container

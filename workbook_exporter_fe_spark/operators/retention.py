@@ -31,15 +31,6 @@ def apply_retention(tier: DataFrame, ttl_interval: str, wm=None) -> DataFrame:
     return tier.filter(F.col("bucket_ts") > cutoff)
 
 
-def surviving_sequences(sequences: DataFrame, events: DataFrame, kept_events: DataFrame) -> DataFrame:
-    """Project the retention decision back to sequences via doc_id semi-join.
-
-    Used by the invariant test: sequences surviving retention must carry
-    byte-identical token arrays (no transform in this path ever touches
-    `tokens`)."""
-    return sequences.join(kept_events.select("doc_id"), "doc_id", "left_semi")
-
-
 def bound_late_events(
     events: DataFrame, delay: str = "interval 1 hour", wm=None, prior_wm=None
 ) -> tuple[DataFrame, "F.Column"]:

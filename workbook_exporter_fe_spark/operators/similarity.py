@@ -226,328 +226,6 @@ def ivf_topk(
     )
 
 
-def pca_topk(
-    embeddings: DataFrame,
-    model,
-    query_vec_id: int = 0,
-    k: int = 10,
-    shortlist: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN via a PCA-reduced shortlist scan + exact raw-space rerank.
-
-    The reduced scan ranks candidates by squared Euclidean distance in
-    the model's top-k subspace (operators/pca.py — projection preserves
-    the dominant-variance geometry, so true neighbors land in a small
-    shortlist), then the shortlist is re-scored with the SAME
-    integer-exact cosine as brute force (``cosine_topk``) — the result
-    contract matches the quantized path (``cosine_topk_quantized``):
-    approximate candidate generation, exact final scores.
-
-    Scale: the scan touches k_dims doubles per row instead of d (the
-    storage/bandwidth win quantization couldn't show at int8 — 64→16
-    dims is 4×), the shortlist is top-N via TakeOrdered (no full sort),
-    and the rerank reads only ``shortlist`` raw vectors.
-
-    For COSINE retrieval, fit the model on (and pass) L2-NORMALIZED
-    embeddings: on the unit sphere cosine is monotone in Euclidean
-    distance (cos = 1 − d²/2), so the subspace-L2 shortlist targets the
-    right neighbors; on raw vectors with a large common mean the two
-    rankings diverge and recall suffers (pinned in tests/test_pca.py).
-    The rerank's cosine is scale-invariant, so scores are unchanged."""
-    from workbook_exporter_fe_spark.operators.pca import pca_project
-
-    sl = shortlist if shortlist is not None else 4 * k
-    proj = pca_project(embeddings, model, vec_col=vec_col, out_col="_p")
-    qp = proj.filter(F.col(id_col) == query_vec_id).select(
-        F.col("_p").alias("_qp")
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("_p"), F.col("_qp"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cand = (
-        proj.filter(F.col(id_col) != query_vec_id)
-        .crossJoin(F.broadcast(qp))
-        .select(F.col(id_col), d2.alias("_d2"))
-        .orderBy(F.asc("_d2"), F.asc(id_col))
-        .limit(sl)
-        .select(id_col)
-    )
-    v = embeddings.select(
-        F.col(id_col), _ivec(F.col(vec_col)).alias("iv")
-    ).select(id_col, "iv", _idot(F.col("iv"), F.col("iv")).alias("n"))
-    q = v.filter(F.col(id_col) == query_vec_id).select(
-        F.col("iv").alias("qv"), F.col("n").alias("nq")
-    )
-    cos = _cos(_idot(F.col("iv"), F.col("qv")), F.col("n"), F.col("nq"))
-    return (
-        v.join(cand, id_col)
-        .crossJoin(F.broadcast(q))
-        .select(F.col(id_col), cos.alias("cos"))
-        .orderBy(F.col("cos").desc(), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def kmeans_fit(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, list[float]]:
-    """DataFrame-native Lloyd k-means; returns ((cid, cv), inertia history).
-
-    The IVF docstring's promised refinement: a trained coarse quantizer
-    that drops into the same centroid seam. Deterministic throughout —
-    init picks the k rows with smallest md5(id) (hash-spread, no RNG),
-    assignment ties break to the lower cid — so refits are reproducible
-    on any cluster size.
-
-    Scale per iteration: assignment is a broadcast nested loop over k
-    centroids with a map-side argmin (no shuffle; same shape as ivf_topk
-    assignment); the update is ONE groupBy(cid) computing per-dimension
-    means (partial-aggregated map-side, k×dim output). The per-row
-    distance uses zip_with/aggregate HOFs — interpreted, but per ROW×k
-    with small k, not per candidate pair (CLAUDE.md HOF rule). Lineage is
-    localCheckpoint-truncated per iteration. Empty cells keep their
-    previous centroid.
-
-    Init is a global TakeOrdered (``orderBy(_h).limit(k)``): every
-    partition contributes only its local top-k, so no single task ever
-    holds the corpus — unlike an unpartitioned row_number window, which
-    funnels the whole table through one partition.
-    """
-    from pyspark.sql import Window
-
-    first = embeddings.select(vec_col).first()
-    if first is None:
-        raise ValueError("kmeans_fit: empty embeddings input")
-    dim = len(first[0])
-    v = embeddings.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("x")
-    ).localCheckpoint()
-
-    # k smallest-md5 rows via TakeOrdered (parallel partial top-k per
-    # partition + driver merge of k-row heads) — same deterministic k rows
-    # as the former global-window formulation, minus its one-task funnel.
-    seed_rows = (
-        v.withColumn("_h", F.md5(F.col("id").cast("string")))
-        .orderBy("_h")
-        .limit(k)
-        .collect()
-    )
-    if len(seed_rows) < k:
-        raise ValueError(
-            f"kmeans_fit: need at least k={k} rows, got {len(seed_rows)}"
-        )
-    spark = embeddings.sparkSession
-    cents = spark.createDataFrame(
-        [(cid, list(r["x"])) for cid, r in enumerate(seed_rows)],
-        "cid INT, cv ARRAY<DOUBLE>",
-    ).localCheckpoint()
-
-    def dist2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda p, q: (p - q) * (p - q)),
-            F.lit(0.0),
-            lambda acc, e: acc + e,
-        )
-
-    wa = Window.partitionBy("id").orderBy(F.asc("_d"), F.asc("cid"))
-    history: list[float] = []
-    for _ in range(iters):
-        scored = v.crossJoin(F.broadcast(cents)).select(
-            "id", "x", "cid", dist2(F.col("x"), F.col("cv")).alias("_d")
-        )
-        assigned = (
-            scored.withColumn("_rn", F.row_number().over(wa))
-            .filter(F.col("_rn") == 1)
-            .select("id", "x", "cid", "_d")
-        )
-        inertia, = assigned.agg(F.sum("_d")).first()
-        history.append(float(inertia))
-        new_cents = assigned.groupBy("cid").agg(
-            F.array(*[F.avg(F.col("x")[i]) for i in range(dim)]).alias("cv")
-        )
-        # empty cells keep their previous centroid
-        cents = (
-            cents.select("cid", F.col("cv").alias("_old"))
-            .join(new_cents, "cid", "left")
-            .select("cid", F.coalesce("cv", "_old").alias("cv"))
-            .localCheckpoint()
-        )
-    return cents, history
-
-
-def ivf_topk_kmeans(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    query_vec_id: int = 0,
-    nprobe: int = 2,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """``ivf_topk`` with trained (kmeans_fit) centroids instead of data
-    rows: assign every vector to its nearest centroid (L2, broadcast
-    argmin), probe the query's nprobe nearest cells, exact-cosine rank
-    the candidates. Not oracle-checked (the trainer is iterative);
-    recall vs brute force is pinned in tests."""
-    from pyspark.sql import Window
-
-    def dist2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda p, q: (p - q) * (p - q)),
-            F.lit(0.0),
-            lambda acc, e: acc + e,
-        )
-
-    v = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("x")
-    )
-    scored = v.crossJoin(F.broadcast(centroids)).select(
-        id_col, "x", "cid", dist2(F.col("x"), F.col("cv")).alias("_d")
-    )
-    wa = Window.partitionBy(id_col).orderBy(F.asc("_d"), F.asc("cid"))
-    cells = (
-        scored.withColumn("_rn", F.row_number().over(wa))
-        .filter(F.col("_rn") == 1)
-        .select(F.col(id_col), F.col("cid").alias("cell"))
-    )
-    probed = (
-        scored.filter(F.col(id_col) == query_vec_id)
-        .orderBy(F.asc("_d"), F.asc("cid"))
-        .limit(nprobe)
-        .select(F.col("cid").alias("cell"))
-    )
-    q = v.filter(F.col(id_col) == query_vec_id).select(F.col("x").alias("qx"))
-    dot = F.aggregate(
-        F.zip_with(F.col("x"), F.col("qx"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, e: acc + e,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda acc, e: acc + e * e)
-    )
-    cand = (
-        v.filter(F.col(id_col) != query_vec_id)
-        .join(cells, id_col)
-        .join(F.broadcast(probed), "cell")
-        .crossJoin(F.broadcast(q))
-    )
-    cos = F.round(dot / (norm(F.col("x")) * norm(F.col("qx"))), 6)
-    return (
-        cand.select("cell", F.col(id_col), cos.alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def kmeans_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id_col, cid): nearest trained centroid — ZERO-shuffle assignment.
-
-    The centroid table is k×dim (driver-small by definition of a coarse
-    quantizer), so it collects into a literal array of (d², cid) structs
-    and the argmin is one `array_min` per row — a map-side projection,
-    unlike the window-argmin inside `kmeans_fit`'s training loop (which
-    needs per-id frames anyway). Ties break to the lower cid via struct
-    ordering, matching the trainer. For k beyond ~1k switch to the
-    broadcast-join + min_by formulation; the literal plan node grows with
-    k×dim."""
-    rows = centroids.orderBy("cid").collect()
-    x = F.col(vec_col).cast("array<double>")
-    cands = []
-    for r in rows:
-        cv = F.array(*[F.lit(float(c)) for c in r["cv"]])
-        d2 = F.aggregate(
-            F.zip_with(x, cv, lambda p, q: (p - q) * (p - q)),
-            F.lit(0.0),
-            lambda acc, e: acc + e,
-        )
-        cands.append(F.struct(d2.alias("d"), F.lit(int(r["cid"])).alias("cid")))
-    best = F.array_min(F.array(*cands))["cid"]
-    return embeddings.select(F.col(id_col), best.alias("cid"))
-
-
-def semantic_dedup_pairs(
-    embeddings: DataFrame,
-    centroids: DataFrame | None = None,
-    k: int = 16,
-    iters: int = 3,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup-style near-dup pairs: k-means cells as the candidate
-    blocks, exact integer-scaled cosine verify within each cell.
-
-    Same shape as ``embedding_neardup_pairs`` with the sign-bucket LSH
-    swapped for a TRAINED coarse quantizer: semantically close vectors
-    land in the same cell even when their sign pattern differs, so recall
-    at high thresholds is centroid-quality- rather than plane-luck-bound
-    (the SemDeDup observation: duplicates concentrate inside k-means
-    clusters of the embedding space). The all-pairs join never
-    materializes — the self-join keys on ``cid``; size k ≈ corpus/target
-    cell size so |cell|² stays bounded, exactly like the LSH planes knob.
-    Misses cross-cell pairs by construction (boundary duplicates) — the
-    recall/cost trade every blocked dedup makes; raise k for cost, or OR
-    with `embedding_neardup_pairs` buckets for recall.
-    """
-    if centroids is None:
-        centroids, _ = kmeans_fit(embeddings, k, iters, id_col, vec_col)
-    cells = kmeans_assign(embeddings, centroids, id_col, vec_col)
-    v = (
-        embeddings.select(F.col(id_col), _ivec(F.col(vec_col)).alias("iv"))
-        .select(id_col, "iv", _idot(F.col("iv"), F.col("iv")).alias("n"))
-        .join(cells, id_col)
-    )
-    a = v.select(
-        F.col(id_col).alias("id_a"), F.col("iv").alias("va"),
-        F.col("n").alias("na"), "cid",
-    )
-    b = v.select(
-        F.col(id_col).alias("id_b"), F.col("iv").alias("vb"),
-        F.col("n").alias("nb"), "cid",
-    )
-    pairs = a.join(b, "cid").filter(F.col("id_a") < F.col("id_b"))
-    cos = _cos(_idot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb"))
-    return pairs.select("id_a", "id_b", cos.alias("cos")).filter(
-        F.col("cos") >= threshold
-    )
-
-
-def semantic_dedup(
-    docs: DataFrame,
-    embeddings: DataFrame,
-    centroids: DataFrame | None = None,
-    k: int = 16,
-    iters: int = 3,
-    threshold: float = 0.95,
-    doc_id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Rows of ``docs`` surviving semantic near-dup clustering: candidate
-    pairs from `semantic_dedup_pairs`, transitive closure + one canonical
-    doc per cluster via components.dedup_canonical (min id survives,
-    singletons kept)."""
-    from .components import dedup_canonical
-
-    pairs = semantic_dedup_pairs(
-        embeddings, centroids, k, iters, threshold, vec_id_col, vec_col
-    )
-    return dedup_canonical(docs, pairs, id_col=doc_id_col)
-
-
 # ----------------------------------------------------------- quantization
 
 

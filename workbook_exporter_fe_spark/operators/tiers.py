@@ -87,43 +87,6 @@ def reaggregate(tier: DataFrame, to: str) -> DataFrame:
     return _finalize(out)
 
 
-def token_histogram(events: DataFrame, tier: str = "1m") -> DataFrame:
-    """Per-bucket token histogram: (source, bucket_ts, tok_hist map<int,long>).
-
-    Exact at test scale via explode+groupBy (SURVEY §4.2); the two-level
-    groupBy means the wide exploded relation is partially aggregated
-    map-side before the shuffle. At 100TB you'd cap the domain with a
-    count-min sketch inside applyInPandas; the exact path is the oracle.
-    """
-    bucket = F.date_trunc(TIER_TRUNC[tier], F.col("event_ts")).alias("bucket_ts")
-    per_token = (
-        events.select("source", bucket, F.explode("tokens").alias("token"))
-        .groupBy("source", "bucket_ts", "token")
-        .agg(F.count("*").alias("n"))
-    )
-    return per_token.groupBy("source", "bucket_ts").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("token", "n")))
-        ).alias("tok_hist")
-    )
-
-
-def merge_token_histograms(hist: DataFrame, to: str) -> DataFrame:
-    """Re-aggregate tok_hist maps to a coarser tier (map explode + re-sum)."""
-    bucket = F.date_trunc(TIER_TRUNC[to], F.col("bucket_ts")).alias("bucket_ts")
-    exploded = hist.select(
-        "source", bucket, F.explode("tok_hist").alias("token", "n")
-    )
-    per_token = exploded.groupBy("source", "bucket_ts", "token").agg(
-        F.sum("n").alias("n")
-    )
-    return per_token.groupBy("source", "bucket_ts").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("token", "n")))
-        ).alias("tok_hist")
-    )
-
-
 def distinct_sketch_tier1(
     events: DataFrame, key_col: str = "doc_id", lg_k: int = 12
 ) -> DataFrame:
@@ -227,22 +190,6 @@ def sketch_reaggregate(tier: DataFrame, to: str) -> DataFrame:
     )
 
 
-def sketch_finalize(
-    tier: DataFrame, quantiles: tuple[float, ...] = (0.5, 0.95, 0.99)
-) -> DataFrame:
-    qcols = [
-        F.kll_sketch_get_quantile_double(F.col("kll"), F.lit(q)).alias(f"p{int(q * 100)}")
-        for q in quantiles
-    ]
-    return tier.select(
-        "source",
-        "bucket_ts",
-        F.hll_sketch_estimate("hll").alias("approx_distinct"),
-        *qcols,
-        "cnt",
-    )
-
-
 def theta_bucket_sketches(
     events: DataFrame, tier: str = "1h", key_col: str = "doc_id", lg_k: int = 12
 ) -> DataFrame:
@@ -294,53 +241,9 @@ def bucket_churn(sketches: DataFrame) -> DataFrame:
     )
 
 
-# Continuous-aggregate READ path: answer a granularity-G query from the
-# coarsest stored tier whose bucket divides G (SURVEY §4.2's tier-skipping
-# rewrite — a library routine, no Catalyst rule needed: the caller asks for
-# a granularity, never a tier).
-
-_TIER_SECONDS = (("tier3", 86400), ("tier2", 3600), ("tier1", 60))
-_UNIT_SECONDS = {"s": 1, "m": 60, "h": 3600, "d": 86400}
-
-
-def granularity_seconds(gran: str) -> int:
-    """'5m' → 300. Units: s, m, h, d."""
-    unit = gran[-1]
-    if unit not in _UNIT_SECONDS or not gran[:-1].isdigit():
-        raise ValueError(f"bad granularity {gran!r} (want e.g. '5m', '4h', '1d')")
-    return int(gran[:-1]) * _UNIT_SECONDS[unit]
-
-
-def rollup_at(spark, out_dir: str, gran: str) -> DataFrame:
-    """(source, bucket_ts, sum_v, min_v, max_v, cnt, avg_v) at any
-    granularity that is a multiple of the finest stored tier.
-
-    Picks the coarsest tier table that divides the request — a '1d' query
-    scans ~1/1440th of the rows a tier-1 scan would — then re-aggregates
-    the decomposable columns into floor(epoch/G)*G buckets (handles
-    non-calendar grains like '5m'/'4h' that date_trunc can't express)."""
-    want = granularity_seconds(gran)
-    for tier, sec in _TIER_SECONDS:
-        if want % sec == 0:
-            df = spark.read.parquet(f"{out_dir}/{tier}")
-            if want == sec:
-                return df
-            bucket = F.timestamp_seconds(
-                F.floor(F.unix_timestamp(F.col("bucket_ts").cast("timestamp")) / want)
-                * want
-            ).alias("bucket_ts")
-            out = df.groupBy(F.col("source"), bucket).agg(
-                F.sum("sum_v").alias("sum_v"),
-                F.min("min_v").alias("min_v"),
-                F.max("max_v").alias("max_v"),
-                F.sum("cnt").alias("cnt"),
-            )
-            return _finalize(out)
-    raise ValueError(
-        f"{gran!r} ({want}s) is not derivable from stored tiers (finest: 60s)"
-    )
-
-
+# Continuous-aggregate READ path: answer a range window from the coarsest
+# stored tier whose bucket divides it (SURVEY §4.2's tier-skipping rewrite —
+# a library routine, no Catalyst rule needed).
 def tier_over_time(
     tiers: dict[int, DataFrame],
     func: str,

@@ -327,15 +327,6 @@ def unigram_train_local(
     return model
 
 
-def corpus_loglik(
-    words: DataFrame, model: dict[str, float], max_piece_len: int = 8
-) -> float:
-    """Freq-weighted corpus log-likelihood under the model (the EM
-    objective; tests pin its monotone increase over EM steps)."""
-    _counts, ll = _estep_distributed(words, model, max_piece_len)
-    return ll
-
-
 def unigram_encode(
     docs: DataFrame,
     model: dict[str, float],

@@ -1,12 +1,12 @@
 """Token-vocabulary analytics over pre-tokenized sequences.
 
 The engine's payload is token arrays (BASELINE.json input_hint:
-``tokens:array<int32>``); beside the per-bucket token HISTOGRAM tier
-(operators/tiers.py:token_histogram) a training-data pipeline tracks the
-vocabulary itself: n-gram frequencies, when each token first appeared,
-how fast the vocabulary grows, and what fraction of a bucket's token
-mass is first-occurrence ("new-token rate" — the exact companion to the
-theta-sketch churn tier, at token rather than doc_id granularity).
+``tokens:array<int32>``); beside per-bucket token histograms a
+training-data pipeline tracks the vocabulary itself: n-gram frequencies,
+when each token first appeared, how fast the vocabulary grows, and what
+fraction of a bucket's token mass is first-occurrence ("new-token rate" —
+the exact companion to the theta-sketch churn tier, at token rather than
+doc_id granularity).
 
 Scale design:
 - Shuffle keys are PRIMITIVES: bigrams are packed into one int64
@@ -58,30 +58,6 @@ def token_bigram_counts(
         (F.col("_bg").bitwiseAND(F.lit((1 << 32) - 1))).cast("int").alias("gram_b"),
         "n",
     )
-
-
-def token_ngram_counts(
-    sequences: DataFrame, n: int = 3, min_count: int = 1, key: str = "source"
-) -> DataFrame:
-    """(key, gram array<int>, n): general n-gram frequencies.
-
-    Array-keyed shuffle — exact for any n, but prefer
-    ``token_bigram_counts`` (packed-int64 keys) for n=2 hot paths.
-    """
-    grams = F.explode(
-        F.expr(
-            f"transform(slice(tokens, 1, greatest(size(tokens) - {n - 1}, 0)), "
-            f"(t, i) -> slice(tokens, i + 1, {n}))"
-        )
-    ).alias("gram")
-    counts = (
-        sequences.select(F.col(key), grams)
-        .groupBy(key, "gram")
-        .agg(F.count("*").alias("n"))
-    )
-    if min_count > 1:
-        counts = counts.filter(F.col("n") >= min_count)
-    return counts
 
 
 def vocab_first_seen(events: DataFrame, tier: str = "1d") -> DataFrame:
@@ -198,74 +174,4 @@ def bigram_pmi(
     )
     return out.select(
         key, "gram_a", "gram_b", F.col("_nab").alias("n"), pmi.alias("pmi")
-    )
-
-
-def vocab_stats(docs: DataFrame, text_col: str = "text",
-                key: str = "source") -> DataFrame:
-    """(key, n_tokens, n_types, ttr, hapax, hapax_ratio): per-``key``
-    vocabulary richness — type/token ratio and hapax-legomena share, the
-    standard corpus-health screens (a scraped corpus whose TTR collapses
-    is boilerplate; one whose hapax ratio explodes is OCR noise).
-
-    One corpus-scale explode + groupBy to the vocabulary-sized (key, word)
-    relation, then one tiny per-key aggregate. All-integer + two divides.
-    """
-    wc = (
-        docs.select(F.col(key), F.explode(F.split(F.col(text_col), " ")).alias("word"))
-        .groupBy(key, "word")
-        .agg(F.count("*").alias("n"))
-    )
-    return wc.groupBy(key).agg(
-        F.sum("n").alias("n_tokens"),
-        F.count("*").alias("n_types"),
-        F.round(F.count("*") / F.sum("n"), 6).alias("ttr"),
-        F.sum((F.col("n") == 1).cast("long")).alias("hapax"),
-        F.round(
-            F.sum((F.col("n") == 1).cast("long")) / F.count("*"), 6
-        ).alias("hapax_ratio"),
-    )
-
-
-def zipf_fit(docs: DataFrame, text_col: str = "text", key: str = "source",
-             top_n: int = 1000) -> DataFrame:
-    """(key, n_used, slope, intercept): least-squares fit of
-    ln(freq) = intercept + slope * ln(rank) over the ``top_n``
-    most-frequent unigrams per ``key`` — the Zipf exponent (natural text
-    sits near slope ≈ -1; template/boilerplate corpora flatten it).
-
-    Rank ties break on the word for determinism. Cross-engine exactness:
-    ln(rank)/ln(freq) are rounded to 6 dp and accumulated as
-    DECIMAL(38,12) products — exact, order-independent sums — so the
-    slope/intercept are a fixed IEEE tail over identical aggregates.
-    """
-    wc = (
-        docs.select(F.col(key), F.explode(F.split(F.col(text_col), " ")).alias("word"))
-        .groupBy(key, "word")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy(key).orderBy(F.col("n").desc(), "word")
-    top = wc.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= top_n
-    )
-    x = F.round(F.log(F.col("rank").cast("double")), 6).cast("decimal(38,12)")
-    y = F.round(F.log(F.col("n").cast("double")), 6).cast("decimal(38,12)")
-    agg = top.groupBy(key).agg(
-        F.count("*").alias("k"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * y).alias("sxy"),
-        F.sum(x * x).alias("sxx"),
-    )
-    k = F.col("k").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    num = k * F.col("sxy").cast("double") - sx * sy
-    den = k * F.col("sxx").cast("double") - sx * sx
-    slope = num / den
-    return agg.select(
-        key,
-        F.col("k").alias("n_used"),
-        F.round(slope, 6).alias("slope"),
-        F.round((sy - slope * sx) / k, 6).alias("intercept"),
     )

@@ -24,9 +24,11 @@ from __future__ import annotations
 
 import datetime as _dt
 import json
+import operator
 import os
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -296,7 +298,6 @@ class TierPipeline:
                 wall_sec=round(time.perf_counter() - t0c, 3),
             )
         out["chunks"] = self.spark.read.parquet(chunks_path)
-        self._write_metrics_table()
         return out
 
     def backfill(self, events: DataFrame, start, end, run_fp: str) -> dict:
@@ -627,7 +628,6 @@ class TierPipeline:
             out["anomaly1"] = self.spark.read.parquet(f"{self.out}/anomaly1")
 
         out["chunks"] = self.spark.read.parquet(chunks_path)
-        self._write_metrics_table()
         return out
 
     def run_from_snapshots(self, table) -> dict[str, DataFrame] | None:
@@ -672,34 +672,13 @@ class TierPipeline:
         )
         return out
 
-    def _write_metrics_table(self) -> None:
-        """Mirror the JSONL manifest as a queryable parquet metrics table —
-        the hive-fallback analog of the north rule's Iceberg metadata
-        table (on Iceberg, this becomes an append to a metadata table)."""
-        rows = [
-            {
-                "run_fp": e.get("run_fp"),
-                "stage": e.get("stage"),
-                "status": e.get("status"),
-                "rows_out": e.get("rows_out"),
-                "watermark": str(e.get("watermark")),
-                "wall_sec": float(e.get("wall_sec", 0.0)),
-                "encode_ratio": float(e["encode_ratio"]) if e.get("encode_ratio") is not None else None,
-                "partitions_json": json.dumps(e.get("partitions", {})),
-                "ts": float(e.get("ts", 0.0)),
-            }
-            for e in self.manifest.entries
-        ]
-        if not rows:
-            return
-        schema = (
-            "run_fp string, stage string, status string, rows_out long, "
-            "watermark string, wall_sec double, encode_ratio double, "
-            "partitions_json string, ts double"
-        )
-        self.spark.createDataFrame(rows, schema=schema).write.mode(
-            "overwrite"
-        ).parquet(f"{self.out}/_manifest/metrics")
+
+def _delta_scopable(spec_field) -> bool:
+    """Whether a spec field's value for a tier row can be derived from the
+    events folded into it (see publish_snapshot_tiers)."""
+    if spec_field.source == "bucket_ts":
+        return spec_field.transform in ("day", "month")
+    return spec_field.source == "source"
 
 
 def publish_snapshot_tiers(
@@ -741,8 +720,11 @@ def publish_snapshot_tiers(
     whole partitions, so the delta must carry the untouched
     bucket-mates' rows too (pinned in tests). day()/month() scoping is
     sound for every tier granularity because 1m/1h/1d buckets truncate
-    WITHIN the event's calendar unit; an hour() spec field would not
-    cover tier-3's day-floored buckets, so it forces a full republish.
+    WITHIN the event's calendar unit; any other transform of bucket_ts
+    (hour() misses tier-3's day-floored buckets, identity never equals
+    an event timestamp) forces a full republish, as does a spec field
+    over any column other than source/bucket_ts. Tuples match
+    null-safely, so a null source is republished like any other.
 
     ``spec`` sets the partition layout at FIRST publish (an existing
     store keeps its own spec property). At bounded source cardinality
@@ -781,16 +763,20 @@ def publish_snapshot_tiers(
             proxy is not None
             and table.current_sequence() > 0
             and fields
-            and all(f.transform != "hour" for f in fields)
+            and all(_delta_scopable(f) for f in fields)
         )
         if scoped:
             pcols = [PCOL_PREFIX + f.name for f in fields]
             tuples = (
-                proxy.select(*partition_columns(proxy, fields)).distinct()
+                proxy.select(*partition_columns(proxy, fields))
+                .distinct()
+                .toDF(*["_t" + c for c in pcols])
             )
+            # null-safe: a null source is a partition value like any other
+            on = [F.col(c).eqNullSafe(F.col("_t" + c)) for c in pcols]
             delta = (
                 df.select("*", *partition_columns(df, fields))
-                .join(F.broadcast(tuples), pcols, "left_semi")
+                .join(F.broadcast(tuples), reduce(operator.and_, on), "left_semi")
                 .drop(*pcols)
             )
             rep = table.overwrite_partitions(

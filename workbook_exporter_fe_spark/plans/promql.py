@@ -48,7 +48,7 @@ Semantics deviations (deliberate, each scale- or exactness-motivated):
    sample; ``increase(m[r])`` sums the deltas of samples in ``(t-r, t]``.
    Prometheus instead extrapolates to the window boundary. Ours is the
    decomposable definition (per-bucket increases re-sum exactly across
-   tiers — the same contract as operators/rates.increase_tier1) and is
+   tiers) and is
    reproducible bit-for-bit by any engine.
 3. **Vector matching is 1:1 or many-to-one** (``group_left`` /
    ``group_right``); true many-to-many raises at execution, like

@@ -993,8 +993,8 @@ def q64_gapfill_segmented(spark, sf_dir):
         "source", "bucket_ts", F.round(F.col("sum_v") / F.col("cnt"), 6).alias("avg_v")
     )
     dense = densify(t1, "1m", value_cols=["avg_v"])
-    # one shared carry pass produces both fills (was: two independent
-    # locf_segmented/interpolate_segmented lineages, 2.4× the cost)
+    # one shared carry pass produces both fills (two independent carry
+    # lineages cost 2.4× as much)
     out = fill_segmented(
         dense, {"locf_v": "locf", "interp_v": "interp"}, value_col="avg_v",
         segment="1h",

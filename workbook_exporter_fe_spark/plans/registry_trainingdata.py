@@ -748,8 +748,7 @@ def q37_text_metrics(spark, sf_dir):
 
 
 # Token-histogram analog over the documents table: the flat (source, token,
-# n) form of the tier tables' tok_hist map column (operators/tiers.py
-# token_histogram builds the map form; this is its oracle-able projection),
+# n) form of a per-bucket tok_hist map column (its oracle-able projection),
 # UNION-TAGGED with the vocab bigram analytics (operators/vocab.py
 # token_bigram_counts — packed-int64 shuffle keys) over a deterministic
 # engine-portable tokenization: token id = first 7 hex chars of md5(word)

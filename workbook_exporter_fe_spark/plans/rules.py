@@ -153,12 +153,6 @@ class RuleEngine:
         return self._streak_states(d, [], int(rule.step_s), need)
 
 
-def run_rules(
-    store: MetricStore, rules: list[RecordingRule | AlertingRule | AbsentAlertingRule]
-) -> dict[str, DataFrame]:
-    return RuleEngine(store).run(rules)
-
-
 # --------------------------------------------------- incremental refresh
 
 
@@ -307,7 +301,9 @@ def _restrict(store: MetricStore, min_ts: float) -> MetricStore:
     for name, (loader, labels, ts_col, value_col) in store._lazy.items():
 
         def _bounded_loader(bounds, _l=loader, _ts=ts_col):
-            raw = _l((int(min_ts), _FAR_FUTURE))
+            # intersect with a caller's window (query_range's prune bounds)
+            lo, hi = bounds if bounds is not None else (min_ts, _FAR_FUTURE)
+            raw = _l((max(int(lo), int(min_ts)), min(int(hi), _FAR_FUTURE)))
             return raw.filter(
                 F.col(_ts).cast("timestamp").cast("double")
                 > F.lit(float(min_ts))
@@ -315,50 +311,3 @@ def _restrict(store: MetricStore, min_ts: float) -> MetricStore:
 
         sub._lazy[name] = (_bounded_loader, labels, ts_col, value_col)
     return sub
-
-
-def alert_transitions(
-    alerts: DataFrame,
-    labels: tuple[str, ...] = ("source",),
-    step_s: float = 60.0,
-) -> DataFrame:
-    """Alert state CDC: one event row per transition, from the dense
-    alert frame RuleEngine emits.
-
-    Emits (labels..., ts, event) where event ∈ {'pending', 'firing',
-    'resolved'}: 'pending'/'firing' when a row's state differs from the
-    previous emitted row's (or there was no previous row / a grid gap —
-    a fresh violation after silence re-enters at its own state), and
-    'resolved' stamped one step after the LAST row of a streak once a
-    later row proves the silence (a trailing open streak cannot resolve
-    yet — batch evaluation cannot see past its data). One lag window per
-    series; notification fan-out then processes transition rows only,
-    which is streaks-many, not samples-many.
-    """
-    d = alerts.withColumn(
-        "_tsec", F.col("ts").cast("timestamp").cast("long")
-    )
-    wo = (
-        Window.partitionBy(*labels).orderBy("_tsec")
-        if labels
-        else Window.orderBy("_tsec")
-    )
-    prev_t = F.lag("_tsec").over(wo)
-    prev_s = F.lag("state").over(wo)
-    gap = prev_t.isNull() | (F.col("_tsec") - prev_t > int(step_s))
-    enters = (
-        d.withColumn("_gap", gap)
-        .withColumn("_ps", prev_s)
-        .filter(F.col("_gap") | (F.col("state") != F.col("_ps")))
-        .select(*labels, "ts", F.col("state").alias("event"))
-    )
-    resolved = (
-        d.withColumn("_nt", F.lead("_tsec").over(wo))
-        .filter(F.col("_nt").isNotNull() & (F.col("_nt") - F.col("_tsec") > int(step_s)))
-        .select(
-            *labels,
-            F.timestamp_seconds(F.col("_tsec") + int(step_s)).alias("ts"),
-            F.lit("resolved").alias("event"),
-        )
-    )
-    return enters.unionByName(resolved)

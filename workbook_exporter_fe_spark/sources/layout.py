@@ -8,8 +8,8 @@ the other; Z-ORDERING interleaves the bits of both dimensions so every
 file/row-group covers a small rectangle in (source, time) space — filters
 on EITHER dimension (or both) skip most of the data. This is the same
 technique Delta's OPTIMIZE ZORDER BY and Iceberg's sort-order z-ordering
-apply; here it is a pure-Column implementation (no per-row Python) for the
-parquet fallback backend.
+apply; here it is a pure-Column implementation (no per-row Python) used by
+SnapshotTable.compact(zorder_by=...).
 
 Scale notes: the z-value is ~10 narrow integer expressions per row inside
 the scan stage; the write is one `repartitionByRange(zv)` (a range shuffle,
@@ -22,89 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_SPREAD_MASKS = (
-    (8, 0x00FF00FF),
-    (4, 0x0F0F0F0F),
-    (2, 0x33333333),
-    (1, 0x55555555),
-)
-
-
-def _spread16(x: Column) -> Column:
-    """Spread a 16-bit value's bits to even positions of a 32-bit value
-    (classic Morton bit-twiddling, as Column ops)."""
-    out = x.bitwiseAND(F.lit(0xFFFF))
-    for shift, mask in _SPREAD_MASKS:
-        out = (out.bitwiseOR(F.shiftleft(out, shift))).bitwiseAND(F.lit(mask))
-    return out
-
-
-def morton2(a: Column, b: Column) -> Column:
-    """Interleave two 16-bit bucket ids into one 32-bit Morton code
-    (a in even bits, b in odd bits)."""
-    return _spread16(a).bitwiseOR(F.shiftleft(_spread16(b), 1))
-
-
-def _bucket16(col: Column, lo: Column, hi: Column) -> Column:
-    """Scale a numeric column into [0, 65535] given global lo/hi."""
-    span = (hi - lo).cast("double")
-    frac = F.when(span > 0, (col.cast("double") - lo.cast("double")) / span).otherwise(
-        F.lit(0.0)
-    )
-    return F.least(F.floor(frac * 65536).cast("long"), F.lit(65535))
-
-
-def zorder_value(
-    df: DataFrame, cat_col: str, ts_col: str
-) -> tuple[DataFrame, Column]:
-    """Attach `_zv`: Morton code of (rank-binned category, scaled time
-    bucket).
-
-    The categorical dimension bins by SORTED RANK of the value, not by
-    hash: parquet prunes `cat = x` via the file's min/max on the raw
-    string, and only rank binning keeps those ranges tight (a hash bin
-    scatters lexicographically-far values into the same file and widens
-    every file's min/max to the full domain). The category list is a tiny
-    distinct (low-cardinality by assumption — 64 sources here; up to
-    65,536 supported) collected once; the time dimension scales linearly
-    over its global [min, max] (two scalars, one tiny aggregate)."""
-    lo, hi = df.agg(
-        F.min(F.col(ts_col).cast("long")), F.max(F.col(ts_col).cast("long"))
-    ).first()
-    cats = sorted(r[0] for r in df.select(cat_col).distinct().collect())
-    if len(cats) > 65536:
-        raise ValueError(f"{cat_col}: {len(cats)} categories exceed 16-bit binning")
-    scale = 65535 // max(len(cats) - 1, 1)
-    cat_arr = F.array(*[F.lit(c) for c in cats])
-    cat16 = (F.array_position(cat_arr, F.col(cat_col)) - 1) * scale
-    t16 = _bucket16(F.col(ts_col).cast("long"), F.lit(lo), F.lit(hi))
-    zv = morton2(cat16, t16)
-    return df.withColumn("_zv", zv), zv
-
-
-def write_zordered(
-    df: DataFrame, path: str, cat_col: str, ts_col: str, n_files: int = 64
-) -> None:
-    """Write `df` z-ordered on (cat_col, ts_col): range-partitioned AND
-    sorted by the Morton code, so both files and row groups cover small
-    (category, time) rectangles."""
-    with_zv, _ = zorder_value(df, cat_col, ts_col)
-    (
-        with_zv.repartitionByRange(n_files, "_zv")
-        .sortWithinPartitions("_zv")
-        .drop("_zv")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-# ------------------------------------------------- generalized N-column form
-# zorder_value above is the specialized 2-dim (category, time) layout the
-# event corpus uses (rank-binned category + linearly-scaled time).
-# with_zvalue generalizes it for SnapshotTable.compact(zorder_by=...):
-# any number of NUMERIC/timestamp columns, each rank-binned by EQUI-DEPTH
-# quantile boundaries (one approxQuantile pass) so a skewed column cannot
-# collapse its bits into one bucket the way linear min/max scaling does.
+# with_zvalue: any number of NUMERIC/timestamp columns, each rank-binned by
+# EQUI-DEPTH quantile boundaries (one approxQuantile pass) so a skewed column
+# cannot collapse its bits into one bucket the way linear min/max scaling does.
 
 _Z_NUMERIC = {"int", "bigint", "smallint", "tinyint", "float", "double"}
 
@@ -123,7 +43,7 @@ def _as_double(df: DataFrame, col: str) -> Column:
     raise ValueError(
         f"z-order column {col!r} has type {t}; use numeric/timestamp "
         "columns (for string equality skipping use manifest blooms — "
-        "snapshots.bloom_stats_for_files — or the 2-dim zorder_value)"
+        "snapshots.bloom_stats_for_files)"
     )
 
 

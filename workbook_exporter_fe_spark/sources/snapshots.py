@@ -2,7 +2,7 @@
 
 The north rule asks for an engine "over Iceberg tables ... resumable from
 checkpoint with per-partition lineage + metrics". The container has no
-Iceberg jar (sources/tableio.py:16 gates on that), so this module
+Iceberg jar, so this module
 re-expresses the *table-format mechanics the engine actually relies on*
 as a from-scratch snapshot log over immutable parquet files:
 
@@ -281,15 +281,6 @@ def _merge_tail_segments(
         created.append(os.path.join(meta, ref["path"]))
         segs = segs[:-2] + [ref]
     return segs, created
-
-
-def _segments_footer_rows(raw: dict) -> int:
-    """Total FOOTER rows of a raw manifest without resolving segments."""
-    if raw.get("file_segments"):
-        return sum(int(r["rows"]) for r in raw["file_segments"]) + sum(
-            int(f["rows"]) for f in raw.get("files") or []
-        )
-    return sum(int(f["rows"]) for f in raw.get("files") or [])
 
 
 def max_sequence(root: str) -> int:

@@ -56,91 +56,3 @@ def running_source_stats(events):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-stateful-processing v2):
-# streaming counter-rate. The batch operator (operators/rates.py:
-# counter_deltas) needs each sample's predecessor; across micro-batches the
-# predecessor of a batch's FIRST sample lives in the previous batch, so the
-# stateful processor keeps one (last_ts, last_v) tuple per source in a
-# ValueState (RocksDB-backed) and the in-batch part stays vectorized numpy.
-# State is O(1) per key — the minimal-state streaming form of the lag
-# window, same contract as the batch op (pinned equal in
-# tests/test_stream_rates.py across multi-batch replays).
-# ---------------------------------------------------------------------------
-
-RATE_OUTPUT_SCHEMA = (
-    "source string, event_ts timestamp, doc_id string, v double, "
-    "delta double, rate_ps double"
-)
-
-
-def _rate_processor_cls():
-    """Deferred import: StatefulProcessor only exists on Spark ≥ 4.0."""
-    import numpy as np
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class CounterRateProcessor(StatefulProcessor):
-        def init(self, handle):
-            self._last = handle.getValueState(
-                "last", "last_ts timestamp, last_v double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            if len(pdf) == 0:
-                return
-            pdf = pdf.sort_values(["event_ts", "doc_id"], kind="mergesort")
-            pdf = pdf.reset_index(drop=True)
-            prev = self._last.get() if self._last.exists() else None
-            pv = pdf["v"].shift(1)
-            pt = pdf["event_ts"].shift(1)
-            if prev is not None:
-                pv.iloc[0] = prev[1]
-                pt.iloc[0] = pd.Timestamp(prev[0])
-            v = pdf["v"].to_numpy(dtype=float)
-            prev_v = pv.to_numpy(dtype=float)
-            delta = np.where(v >= prev_v, v - prev_v, v)
-            delta = np.where(np.isnan(prev_v), np.nan, delta)
-            dt = (pdf["event_ts"] - pt).dt.total_seconds().to_numpy()
-            rate = np.where(dt > 0, delta / dt, np.nan)
-            out = pd.DataFrame(
-                {
-                    "source": key[0],
-                    "event_ts": pdf["event_ts"],
-                    "doc_id": pdf["doc_id"],
-                    "v": v,
-                    "delta": delta,
-                    "rate_ps": rate,
-                }
-            )
-            self._last.update(
-                (pdf["event_ts"].iloc[-1].to_pydatetime(), float(v[-1]))
-            )
-            yield out
-
-        def close(self):
-            pass
-
-    return CounterRateProcessor
-
-
-def stream_counter_rate(events):
-    """Streaming counter rate via transformWithStateInPandas.
-
-    ``events`` is a streaming DF (source, event_ts, v, doc_id); output adds
-    reset-adjusted delta and per-second rate, with cross-batch continuity
-    from the per-source ValueState. Requires the RocksDB state store
-    provider (set by tests; the default HDFS-backed store does not support
-    transformWithState) and `google.protobuf` in the Python env (the JVM
-    state server speaks protobuf to the Python driver worker; this
-    container ships without it, so the end-to-end test is gated and the
-    processor kernel is pinned directly in tests/test_stream_rates.py)."""
-    proc = _rate_processor_cls()()
-    return events.groupBy("source").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=RATE_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )

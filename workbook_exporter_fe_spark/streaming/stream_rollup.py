@@ -46,39 +46,6 @@ def stream_tier1(
     )
 
 
-def stream_sessions(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour",
-    key: str = "source",
-) -> DataFrame:
-    """Streaming sessionization via Spark's native ``session_window``:
-    dynamic-length merging windows per key, closed ``gap`` after the last
-    event, finalized by the watermark (state for a session is dropped once
-    the watermark passes its close — bounded state for unbounded keys,
-    which the fixed tumbling window of ``stream_tier1`` cannot express).
-
-    Same schema in batch: calling this on a static DataFrame (no watermark
-    needed) computes identical sessions — pinned by
-    tests/test_streaming.py against the window-scan batch formulation
-    the gate's q46 uses."""
-    grouped = events
-    if events.isStreaming:
-        grouped = events.withWatermark("event_ts", watermark)
-    return (
-        grouped.groupBy(F.col(key), F.session_window("event_ts", gap).alias("sess"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("v").alias("sum_v"),
-        )
-        .select(
-            key,
-            F.col("sess.start").alias("session_start"),
-            F.col("sess.end").alias("session_end"),
-            "n_events",
-            "sum_v",
-        )
-    )
-
-
 def stream_to_tier_table(
     events: DataFrame, table_path: str, checkpoint_dir: str,
     watermark: str = "10 minutes", bucket: str = "1 minute",
@@ -103,33 +70,3 @@ def stream_to_tier_table(
         .start()
     )
 
-
-def stream_tiers_from_snapshot_log(
-    spark, table_root: str, tier1_path: str, checkpoint_dir: str,
-    watermark: str = "10 minutes", bucket: str = "1 minute",
-):
-    """Continuous tier-1 maintenance by TAILING the tier-0 SnapshotTable.
-
-    The batch consumer (plans/pipeline.py run_from_snapshots) polls
-    ``changes()`` per call; this is the same loop as a standing
-    Structured Streaming query over the ``snapshot_log`` source
-    (sources/snapshot_source.py): offsets are snapshot sequences, each
-    micro-batch reads only the files the producer appended, and the
-    foreachBatch keyed merge keeps the tier table idempotent — so a
-    restarted query replays from Spark's checkpoint without
-    double-counting buckets. Compactions on the producer side are
-    invisible (replace snapshots are skipped by the source)."""
-    from workbook_exporter_fe_spark.sources import snapshot_source
-
-    snapshot_source.register(spark)
-    events = (
-        spark.readStream.format(snapshot_source.FORMAT_NAME).load(table_root)
-    )
-    if dict(events.dtypes).get("event_ts") == "timestamp_ntz":
-        # watermarks need a plain timestamp; sessions are UTC-pinned
-        events = events.withColumn(
-            "event_ts", F.col("event_ts").cast("timestamp")
-        )
-    return stream_to_tier_table(
-        events, tier1_path, checkpoint_dir, watermark, bucket
-    )
